@@ -95,6 +95,18 @@ def _executor_task_ms(spark) -> int | None:
         return None
 
 
+def _record_core_sec(
+    core_sec: dict[str, float], name: str, c0: int | None, c1: int | None
+) -> None:
+    """Set `name`'s core_sec to the new best rep's counter delta. When
+    either read failed, drop the entry: an earlier rep's value would no
+    longer match the wall time reported beside it."""
+    if c0 is None or c1 is None:
+        core_sec.pop(name, None)
+    else:
+        core_sec[name] = round((c1 - c0) / 1000.0, 3)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -158,9 +170,7 @@ def main() -> int:
                     # wall time (a matched wall/core pair, additive
                     # field only — the timed region is unchanged; the
                     # REST reads sit outside the t0..dt bracket)
-                    c1 = _executor_task_ms(spark)
-                    if c0 is not None and c1 is not None:
-                        core_sec[name] = round((c1 - c0) / 1000.0, 3)
+                    _record_core_sec(core_sec, name, c0, _executor_task_ms(spark))
             except Exception as e:
                 print(f"# ERROR {name}: {e}", file=sys.stderr)
                 best = best if best is not None and best > 0 else -1.0

@@ -7,22 +7,26 @@ output. The prologue (cli `job run`) already dropped ids whose .wav is
 missing and pass-through'd ping messages.
 """
 
-from pyspark.sql import functions as F
+from klio_spark.audio import get_features, load_binary
 
-from klio_spark.audio import get_mel_spec, get_mfcc, load_audio, load_binary
+
+def features(df, config):
+    """The features table `run` writes: element, sr, mel_spec, mfcc."""
+    # one pass decodes each WAV once and computes both features from one
+    # shared mel spectrogram, so the reference's per-feature branches and
+    # their CoGroupByKey (integration/audio-spectrograms/run.py:76-91)
+    # need no join here
+    return get_features(
+        load_binary(df.select("element"), config.data_inputs[0]),
+        ("mel_spec", "mfcc"),
+        n_fft=512,
+        hop_length=256,
+        n_mels=32,
+        n_mfcc=8,
+    )
 
 
 def run(df, config):
-    cfg = config.data_inputs[0]
-    audio = load_audio(load_binary(df, cfg))
-    # each feature op consumes the waveform column (bytes stay out of
-    # shuffles); combining features is a join on element — the reference's
-    # CoGroupByKey dance (integration/audio-spectrograms/run.py:76-91)
-    mel = get_mel_spec(audio, n_fft=512, hop_length=256, n_mels=32)
-    mf = get_mfcc(audio, n_mfcc=8, n_fft=512, hop_length=256, n_mels=32)
-    feats = mel.select("element", "sr", "mel_spec").join(
-        mf.select("element", "mfcc"), "element"
-    )
     out_dir = config.event_outputs[0].location + "_features"
-    feats.write.mode("overwrite").parquet(out_dir)
+    features(df, config).write.mode("overwrite").parquet(out_dir)
     return df

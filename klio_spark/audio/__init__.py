@@ -10,16 +10,19 @@ Operator parity (audio/src/klio_audio/transforms/):
   get_spec      ~ GetSpec (audio.py:135-187)
   get_mel_spec  ~ GetMelSpec (audio.py:190-244)
   get_mfcc      ~ GetMFCC (audio.py:247-305)
+  get_features  ~ LoadAudio + any of the above in ONE pass: each payload
+                  decoded once, one STFT and one mel spectrogram shared
   render_plot   ~ SpecToPlot/... (audio.py:308-515): PNG bytes via
                   matplotlib when available, else gated (import-try)
 
-DSP kernels are numpy (klio_spark.audio.dsp) — librosa-compatible
-parameters, swapped for librosa when installed. 2-D features are stored
-as ARRAY<ARRAY<FLOAT>> columns (rows = frequency bins, librosa layout).
+DSP kernels are numpy (klio_spark.audio.dsp) with librosa-compatible
+parameters. 2-D features are stored as ARRAY<ARRAY<FLOAT>> columns
+(rows = frequency bins, librosa layout).
 """
 
 from __future__ import annotations
 
+import io
 from collections.abc import Iterator
 
 import numpy as np
@@ -31,13 +34,6 @@ from klio_spark.audio import dsp
 from klio_spark.config import DataIOConfig
 from klio_spark.operators.existence import path_for
 
-try:  # pragma: no cover - not in this container
-    import librosa  # noqa: F401
-
-    HAS_LIBROSA = True
-except ImportError:
-    HAS_LIBROSA = False
-
 MAT = "array<array<float>>"
 
 
@@ -48,9 +44,10 @@ def load_binary(
     binaryFile scan of the data-input location (GcsLoadBinary parity).
 
     One distributed scan of the store instead of per-element downloads;
-    bytes appear in the LAST stage before the consuming UDF. The blob
-    side is the big one — Spark shuffles it by path only once, and AQE
-    picks sort-merge vs broadcast by observed size.
+    bytes appear in the LAST stage before the consuming UDF. Spark picks
+    the join from the store's size: under the broadcast threshold it
+    reads EVERY blob in the location (not only the requested ones) and
+    broadcasts them; above it, the store is shuffled by path.
     """
     spark = spark or df.sparkSession
     reader = spark.read.format("binaryFile")
@@ -68,58 +65,48 @@ def load_binary(
     return joined.withColumnRenamed("_blob", "payload")
 
 
-def _matrix_udf(fn, out_type: str = MAT):
-    """Wrap waveform→matrix numpy fn as a mapInPandas stage preserving all
-    input columns except the consumed one."""
+def _map_rows(df: DataFrame, in_cols, out_fields, fn, drop=()) -> DataFrame:
+    """One mapInPandas stage: `df`'s columns except `drop`, then
+    `out_fields` [(name, type)]. `fn(*values of in_cols)` returns one
+    value per out field; a row whose first in_col is null gets nulls.
+    Matrix values go out as lists of numpy rows, which Arrow converts
+    without a Python float per element."""
+    fields = [f for f in df.schema.fields if f.name not in drop]
+    keep = [f.name for f in fields]
+    schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
+        + [f"`{name}` {typ}" for name, typ in out_fields]
+    )
+    nulls = (None,) * len(out_fields)
 
-    def apply(df: DataFrame, in_col: str, out_col: str, **kw) -> DataFrame:
-        keep = [f for f in df.schema.fields if f.name != in_col]
-        schema_str = ", ".join(
-            [f"`{f.name}` {f.dataType.simpleString()}" for f in keep]
-            + [f"`{out_col}` {out_type}"]
-        )
-        keep_names = [f.name for f in keep]
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pdf[keep].copy()
+            rows = [
+                fn(*vals) if vals[0] is not None else nulls
+                for vals in zip(*(pdf[c] for c in in_cols))
+            ]
+            for i, (name, _) in enumerate(out_fields):
+                out[name] = [r[i] for r in rows]
+            yield out
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = pdf[keep_names].copy()
-                out[out_col] = [
-                    fn(row, pdf.iloc[i], **kw) if row is not None else None
-                    for i, row in enumerate(pdf[in_col])
-                ]
-                yield out
+    return df.mapInPandas(run, schema=schema)
 
-        return df.mapInPandas(run, schema=schema_str)
 
-    return apply
+def _rows(m: np.ndarray) -> list:
+    return list(m.astype(np.float32))
+
+
+def _f32(a) -> np.ndarray:
+    return np.asarray(a, dtype=np.float32)
 
 
 def load_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """payload WAV bytes → waveform ARRAY<FLOAT> + sr (LoadAudio parity)."""
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema_str = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in keep]
-        + ["waveform array<float>", "sr int"]
+    return _map_rows(
+        df, [payload_col], [("waveform", "array<float>"), ("sr", "int")],
+        lambda raw: dsp.decode_wav(bytes(raw)), drop=(payload_col,),
     )
-    keep_names = [f.name for f in keep]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[keep_names].copy()
-            waves, srs = [], []
-            for raw in pdf[payload_col]:
-                if raw is None:
-                    waves.append(None)
-                    srs.append(None)
-                    continue
-                y, sr = dsp.decode_wav(bytes(raw))
-                waves.append(y.tolist())
-                srs.append(sr)
-            out["waveform"] = waves
-            out["sr"] = srs
-            yield out
-
-    return df.mapInPandas(run, schema=schema_str)
 
 
 def get_stft(
@@ -130,42 +117,26 @@ def get_stft(
 ) -> DataFrame:
     """waveform → stft_mag + stft_phase matrices (GetSTFT parity; complex
     split into magnitude/phase because Arrow has no complex type)."""
-    keep = [f for f in df.schema.fields]
-    schema_str = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in keep]
-        + [f"stft_mag {MAT}", f"stft_phase {MAT}"]
+    def fn(wv):
+        s = dsp.stft(_f32(wv), n_fft, hop_length)
+        return _rows(np.abs(s)), _rows(np.angle(s))
+
+    return _map_rows(
+        df, [waveform_col], [("stft_mag", MAT), ("stft_phase", MAT)], fn
     )
-    keep_names = [f.name for f in keep]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[keep_names].copy()
-            mags, phases = [], []
-            for wv in pdf[waveform_col]:
-                if wv is None:
-                    mags.append(None)
-                    phases.append(None)
-                    continue
-                s = dsp.stft(np.asarray(wv, dtype=np.float32), n_fft, hop_length)
-                mags.append([r.tolist() for r in np.abs(s).astype(np.float32)])
-                phases.append([r.tolist() for r in np.angle(s).astype(np.float32)])
-            out["stft_mag"] = mags
-            out["stft_phase"] = phases
-            yield out
 
-    return df.mapInPandas(run, schema=schema_str)
+def _spec(mag: np.ndarray) -> list:
+    return _rows(dsp.amplitude_to_db(mag.astype(np.float64)))
 
 
 def get_spec(df: DataFrame, mag_col: str = "stft_mag") -> DataFrame:
     """|STFT| → dB spectrogram ref=max (GetSpec parity)."""
     # Arrow hands nested arrays as object-dtype rows; stack to a 2-D matrix
-    fn = lambda mag, _row: [
-        r.tolist()
-        for r in dsp.amplitude_to_db(
-            np.stack([np.asarray(m, dtype=np.float64) for m in mag])
-        ).astype(np.float32)
-    ]
-    return _matrix_udf(fn)(df, mag_col, "spec")
+    return _map_rows(
+        df, [mag_col], [("spec", MAT)],
+        lambda mag: (_spec(np.stack([_f32(m) for m in mag])),), drop=(mag_col,),
+    )
 
 
 def get_mel_spec(
@@ -177,13 +148,13 @@ def get_mel_spec(
     n_mels: int = 128,
 ) -> DataFrame:
     """waveform → mel power spectrogram (GetMelSpec parity)."""
-    fn = lambda wv, row: [
-        r.tolist()
-        for r in dsp.melspectrogram(
-            np.asarray(wv, dtype=np.float32), int(row[sr_col]), n_fft, hop_length, n_mels
-        ).astype(np.float32)
-    ]
-    return _matrix_udf(fn)(df, waveform_col, "mel_spec")
+    return _map_rows(
+        df, [waveform_col, sr_col], [("mel_spec", MAT)],
+        lambda wv, sr: (
+            _rows(dsp.melspectrogram(_f32(wv), int(sr), n_fft, hop_length, n_mels)),
+        ),
+        drop=(waveform_col,),
+    )
 
 
 def get_mfcc(
@@ -196,18 +167,74 @@ def get_mfcc(
     n_mels: int = 128,
 ) -> DataFrame:
     """waveform → MFCC matrix (GetMFCC parity)."""
-    fn = lambda wv, row: [
-        r.tolist()
-        for r in dsp.mfcc(
-            np.asarray(wv, dtype=np.float32),
-            int(row[sr_col]),
-            n_mfcc,
-            n_fft,
-            hop_length,
-            n_mels,
-        ).astype(np.float32)
-    ]
-    return _matrix_udf(fn)(df, waveform_col, "mfcc")
+    return _map_rows(
+        df, [waveform_col, sr_col], [("mfcc", MAT)],
+        lambda wv, sr: (
+            _rows(dsp.mfcc(_f32(wv), int(sr), n_mfcc, n_fft, hop_length, n_mels)),
+        ),
+        drop=(waveform_col,),
+    )
+
+
+FEATURES = ("stft_mag", "stft_phase", "spec", "mel_spec", "mfcc")
+
+
+def get_features(
+    df: DataFrame,
+    features=("mel_spec", "mfcc"),
+    payload_col: str = "payload",
+    n_fft: int = 2048,
+    hop_length: int = 512,
+    n_mels: int = 128,
+    n_mfcc: int = 20,
+) -> DataFrame:
+    """payload WAV bytes → sr + every requested feature, in ONE pass.
+
+    Each payload is decoded once and its STFT taken once; mel_spec and
+    mfcc share one mel spectrogram. The waveform stays numpy inside the
+    pass. Each feature equals its per-op chain bit for bit: load_audio →
+    get_stft (stft_mag, stft_phase) → get_spec (spec), get_mel_spec,
+    get_mfcc with the same parameters. A null payload keeps its row with
+    null sr and features."""
+    if not set(features) <= set(FEATURES):
+        raise ValueError(f"audio features {features}: known are {FEATURES}")
+    with_mel = bool({"mel_spec", "mfcc"} & set(features))
+
+    def fn(raw):
+        y, sr = dsp.decode_wav(bytes(raw))
+        s = dsp.stft(y, n_fft, hop_length)
+        mel = dsp.mel_from_stft(s, sr, n_fft, n_mels) if with_mel else None
+        make = {
+            "stft_mag": lambda: _rows(np.abs(s)),
+            "stft_phase": lambda: _rows(np.angle(s)),
+            # get_spec reads the magnitude back as float32
+            "spec": lambda: _spec(np.abs(s).astype(np.float32)),
+            "mel_spec": lambda: _rows(mel),
+            "mfcc": lambda: _rows(dsp.mfcc_from_mel(mel, n_mfcc)),
+        }
+        return (sr, *(make[f]() for f in features))
+
+    return _map_rows(
+        df, [payload_col], [("sr", "int")] + [(f, MAT) for f in features], fn,
+        drop=(payload_col,),
+    )
+
+
+def _plotter():
+    """matplotlib.pyplot with the headless Agg backend, or None. Probed
+    on the executor that renders: a driver-side check would bake the
+    driver's environment into the closure and fail the task in mixed
+    driver/executor images instead of falling back to the built-in
+    encoder."""
+    try:
+        import matplotlib
+
+        matplotlib.use("Agg")
+        import matplotlib.pyplot as plt
+
+        return plt
+    except ImportError:
+        return None
 
 
 def render_plot(
@@ -229,53 +256,21 @@ def render_plot(
         LUT, and encodes as a true RGB PNG, one pixel per cell. No
         external deps, deterministic bytes — plotting works in minimal
         containers instead of gating on the library."""
-    keep = [f for f in df.schema.fields]
-    schema_str = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in keep]
-        + [f"{out_col} binary"]
-    )
-    keep_names = [f.name for f in keep]
+    def fn(mat):
+        m = np.stack([np.asarray(r, dtype=np.float64) for r in mat])
+        plt = _plotter()
+        if plt is None:
+            return (_matrix_to_png(m, cmap=cmap),)
+        fig, ax = plt.subplots(figsize=(6, 4), dpi=dpi)
+        ax.imshow(m, aspect="auto", origin="lower", cmap=cmap)
+        ax.set_xlabel("frames")
+        ax.set_ylabel("bins")
+        buf = io.BytesIO()
+        fig.savefig(buf, format="png", bbox_inches="tight")
+        plt.close(fig)
+        return (buf.getvalue(),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-
-        # probe matplotlib HERE, on the executor: a driver-side check
-        # would bake the driver's environment into the closure and fail
-        # the task in mixed driver/executor images instead of falling
-        # back to the built-in encoder
-        try:
-            import matplotlib
-
-            matplotlib.use("Agg")  # headless executors
-            import matplotlib.pyplot as plt
-
-            have_mpl = True
-        except ImportError:
-            have_mpl = False
-
-        for pdf in batches:
-            out = pdf[keep_names].copy()
-            pngs = []
-            for mat in pdf[matrix_col]:
-                if mat is None:
-                    pngs.append(None)
-                    continue
-                m = np.stack([np.asarray(r, dtype=np.float64) for r in mat])
-                if not have_mpl:
-                    pngs.append(_matrix_to_png(m, cmap=cmap))
-                    continue
-                fig, ax = plt.subplots(figsize=(6, 4), dpi=dpi)
-                ax.imshow(m, aspect="auto", origin="lower", cmap=cmap)
-                ax.set_xlabel("frames")
-                ax.set_ylabel("bins")
-                buf = _io.BytesIO()
-                fig.savefig(buf, format="png", bbox_inches="tight")
-                plt.close(fig)
-                pngs.append(buf.getvalue())
-            out[out_col] = pngs
-            yield out
-
-    return df.mapInPandas(run, schema=schema_str)
+    return _map_rows(df, [matrix_col], [(out_col, "binary")], fn)
 
 
 def _magma_lut() -> np.ndarray:

@@ -130,6 +130,11 @@ def mel_filterbank(
     return weights
 
 
+def mel_from_stft(s: np.ndarray, sr: int, n_fft: int, n_mels: int = 128) -> np.ndarray:
+    """Power mel spectrogram of a complex STFT `s` taken with `n_fft`."""
+    return mel_filterbank(sr, n_fft, n_mels) @ (np.abs(s) ** 2)
+
+
 def melspectrogram(
     y: np.ndarray,
     sr: int,
@@ -138,8 +143,7 @@ def melspectrogram(
     n_mels: int = 128,
 ) -> np.ndarray:
     """Power mel spectrogram (GetMelSpec parity, audio.py:190-244)."""
-    s = np.abs(stft(y, n_fft, hop_length)) ** 2
-    return mel_filterbank(sr, n_fft, n_mels) @ s
+    return mel_from_stft(stft(y, n_fft, hop_length), sr, n_fft, n_mels)
 
 
 def dct_ortho(n_out: int, n_in: int) -> np.ndarray:
@@ -152,6 +156,11 @@ def dct_ortho(n_out: int, n_in: int) -> np.ndarray:
     return basis
 
 
+def mfcc_from_mel(m: np.ndarray, n_mfcc: int = 20) -> np.ndarray:
+    """MFCCs of a power mel spectrogram `m` (n_mels rows)."""
+    return dct_ortho(n_mfcc, m.shape[0]) @ power_to_db(m, ref="max")
+
+
 def mfcc(
     y: np.ndarray,
     sr: int,
@@ -162,9 +171,7 @@ def mfcc(
 ) -> np.ndarray:
     """MFCCs = DCT-II(ortho) of the dB mel spectrogram (GetMFCC parity,
     audio.py:247-305: power_to_db + librosa.feature.mfcc)."""
-    m = melspectrogram(y, sr, n_fft, hop_length, n_mels)
-    db = power_to_db(m, ref="max")
-    return dct_ortho(n_mfcc, n_mels) @ db
+    return mfcc_from_mel(melspectrogram(y, sr, n_fft, hop_length, n_mels), n_mfcc)
 
 
 def synth_wav(

@@ -155,17 +155,22 @@ def clear_payload_if_unchanged(df: DataFrame, prev_payload: Column) -> DataFrame
     )
 
 
-def coerce_v1(df: DataFrame) -> DataFrame:
+def coerce_v1(df: DataFrame, v1: Column | None = None) -> DataFrame:
     """V1→V2 coercion: entity_id-style key becomes `element`, version→2.
 
     Mirrors serializer.py:23-53 (`entity_id` copied into `element`).
     In column form the key is already `element`; we normalize version and
-    fold v1 `downstream` routing into recipients=anyone.
+    fold v1 `downstream` routing into recipients=anyone. With `v1`, only
+    the rows where it holds are coerced; the rest pass unchanged.
     """
-    return df.withColumn("version", F.lit(2).cast("int")).withColumn(
+    def coerce(name: str, value: Column) -> Column:
+        return value if v1 is None else F.when(v1, value).otherwise(F.col(name))
+
+    # recipients_mode first: `v1` may read the version rewritten below
+    return df.withColumn(
         "recipients_mode",
-        F.coalesce(F.col("recipients_mode"), F.lit(ANYONE)),
-    )
+        coerce("recipients_mode", F.coalesce(F.col("recipients_mode"), F.lit(ANYONE))),
+    ).withColumn("version", coerce("version", F.lit(2).cast("int")))
 
 
 def job_lit(job_name: str, project: str) -> Column:

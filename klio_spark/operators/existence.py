@@ -58,27 +58,33 @@ def list_location(spark: SparkSession, cfg: DataIOConfig) -> DataFrame:
     )
 
 
-def _exists_split(
-    df: DataFrame, listing: DataFrame, cfg: DataIOConfig
-) -> TaggedSplit:
-    expected = path_for(cfg).alias("_klio_path")
+def exists_flag(
+    df: DataFrame, listing: DataFrame, cfg: DataIOConfig, flag: str
+) -> DataFrame:
+    """`df` plus a non-null boolean column `flag`: whether the element's
+    path is in `listing`, set by one left join."""
     # no broadcast HINT: Spark auto-broadcasts a small listing from its
     # stats, and at billions of objects (where the module doc promises a
     # shuffle join) an unconditional hint would force the whole listing
     # through the driver
-    listing = listing.withColumnRenamed("path", "_klio_listed")
-    joined = df.withColumn("_klio_path", expected).join(
-        listing, F.col("_klio_path") == F.col("_klio_listed"), "left"
+    path, listed = f"{flag}_path", f"{flag}_listed"
+    listing = listing.select(F.col("path").alias(listed))
+    return (
+        df.withColumn(path, path_for(cfg))
+        .join(listing, F.col(path) == F.col(listed), "left")
+        .withColumn(flag, F.col(listed).isNotNull())
+        .drop(path, listed)
     )
-    found = (
-        joined.filter(F.col("_klio_listed").isNotNull())
-        .drop("_klio_path", "_klio_listed")
+
+
+def _exists_split(
+    df: DataFrame, listing: DataFrame, cfg: DataIOConfig
+) -> TaggedSplit:
+    flagged = exists_flag(df, listing, cfg, "_klio_exists")
+    return TaggedSplit(
+        process=flagged.filter(F.col("_klio_exists")).drop("_klio_exists"),
+        pass_thru=flagged.filter(~F.col("_klio_exists")).drop("_klio_exists"),
     )
-    not_found = (
-        joined.filter(F.col("_klio_listed").isNull())
-        .drop("_klio_path", "_klio_listed")
-    )
-    return TaggedSplit(process=found, pass_thru=not_found)
 
 
 def check_input_exists(

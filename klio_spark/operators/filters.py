@@ -9,9 +9,11 @@ Reference: lib/src/klio/transforms/helpers.py
   - KlioDrop           (:264-284)
 
 Each returns a TaggedSplit of lazily-filtered views over ONE parent
-DataFrame. The parent is not cached here: both branches are cheap boolean
-filters that Catalyst evaluates in the same scan; callers that fan a branch
-into an expensive UDF should .persist() the parent themselves.
+DataFrame. Each branch is its own filter over the parent's whole plan:
+a consumer that reads both branches (a union, a join) runs the parent's
+lineage once per branch, scan included. The job prologue therefore sets
+one branch tag per row instead of chaining these splits
+(operators.prologue).
 """
 
 from __future__ import annotations

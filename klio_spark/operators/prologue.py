@@ -9,16 +9,20 @@ Reference: exec/src/klio_exec/commands/run.py
                                       flattening pass-thru branches
   - _setup_pipeline       (:511-558)  user run(df, config) + epilogue write
 
-Per event input the canonical chain is:
-  read → version-tag(+v1 coercion) → recipients filter → audit append →
-  ping split → output-exists split → force split → input-exists split →
-  drop not_found   ⇒ `process` stream to user code, and the union of
-  pass-thru branches (ping + unforced-existing-output) rejoins the user
-  output before the event write.
+Per event input the prologue is ONE tagged stream, the way Beam computes
+a tagged output once:
+  read → v1 coercion (column-wise) → recipients filter → audit append →
+  left join against the output listing (flag) → left join against the
+  input listing (flag) → one CASE WHEN that names each row's branch:
+  ping → pass_thru; output exists and not forced → pass_thru; input
+  missing → not_found; otherwise process.
+`process`, `pass_thru` and `not_found` are plain filters of that frame.
 
-All stages are boolean-predicate filters over envelope columns, so the
-whole prologue is one codegen'd scan stage — klio's semantic
-short-circuits at zero per-element cost.
+Plan: the source is scanned once per consumed branch. The coercion,
+recipients and audit steps are narrow projections in the scan's stage;
+each listing is a broadcast (or, at scale, shuffled) left join, so a
+plan that reads two branches — the event write's process ∪ pass_thru —
+scans the source twice and reuses each listing's broadcast exchange.
 """
 
 from __future__ import annotations
@@ -26,19 +30,18 @@ from __future__ import annotations
 import dataclasses
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from klio_spark.config import KlioJobConfig
 from klio_spark.context import KlioContext
 from klio_spark.envelope import coerce_v1
 from klio_spark.operators.audit import update_audit_log
-from klio_spark.operators.existence import check_input_exists, check_output_exists
-from klio_spark.operators.filters import (
-    check_recipients,
-    filter_force,
-    filter_ping,
-    tag_message_version,
-)
+from klio_spark.operators.existence import exists_flag, list_location
+from klio_spark.operators.filters import check_recipients
+
+PROCESS, PASS_THRU, NOT_FOUND = "process", "pass_thru", "not_found"
+_BRANCH, _OUT, _IN = "_klio_branch", "_klio_out_exists", "_klio_in_exists"
 
 
 @dataclasses.dataclass
@@ -58,6 +61,77 @@ def _union(dfs: list[DataFrame]) -> DataFrame | None:
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
+def _listings(
+    config: KlioJobConfig,
+    spark: SparkSession,
+    input_listing: DataFrame | None = None,
+    output_listing: DataFrame | None = None,
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """(input listing, output listing): the one passed in, else a fresh
+    listing; None where no location is configured or its existence
+    check is skipped."""
+    def listed(cfgs, given):
+        cfg = cfgs[0] if cfgs else None
+        if cfg is None or cfg.skip_klio_existence_check:
+            return None
+        return given if given is not None else list_location(spark, cfg)
+
+    return (
+        listed(config.data_inputs, input_listing),
+        listed(config.data_outputs, output_listing),
+    )
+
+
+def _branch(config: KlioJobConfig, out_checked: bool, in_checked: bool) -> Column:
+    """Each row's branch (run.py:320-402). A null ping, or a null force
+    on a row whose output exists, yields null: such a row is in no
+    branch, as no side of a boolean filter pair keeps it."""
+    data_in = config.data_inputs[0] if config.data_inputs else None
+    data_out = config.data_outputs[0] if config.data_outputs else None
+    none = F.lit(None).cast("string")
+    is_ping = F.col("ping") | F.lit(bool(data_in and data_in.ping))
+    tag = F.when(is_ping.isNull(), none).when(is_ping, PASS_THRU)
+    if out_checked:
+        is_force = F.col("force") | F.lit(bool(data_out.force))
+        tag = tag.when(F.col(_OUT) & is_force.isNull(), none).when(
+            F.col(_OUT) & ~is_force, PASS_THRU
+        )
+    if in_checked:
+        tag = tag.when(~F.col(_IN), NOT_FOUND)
+    return tag.otherwise(PROCESS)
+
+
+def _prologue(
+    df: DataFrame,
+    config: KlioJobConfig,
+    input_listing: DataFrame | None,
+    output_listing: DataFrame | None,
+) -> PrologueResult:
+    job, project = config.job_name, config.project
+    # the version split as one column-wise step: v1 rows are coerced in
+    # place, and a null version drops as it did from both split sides
+    df = coerce_v1(df.filter(F.col("version").isNotNull()), F.col("version") < 2)
+    df = update_audit_log(check_recipients(df, job, project), job, project)
+    cols = df.columns
+    if output_listing is not None:
+        df = exists_flag(df, output_listing, config.data_outputs[0], _OUT)
+    if input_listing is not None:
+        df = exists_flag(df, input_listing, config.data_inputs[0], _IN)
+    tagged = df.withColumn(
+        _BRANCH,
+        _branch(config, output_listing is not None, input_listing is not None),
+    )
+
+    def branch(name: str) -> DataFrame:
+        return tagged.filter(F.col(_BRANCH) == name).select(*cols)
+
+    return PrologueResult(
+        process=branch(PROCESS),
+        pass_thru=branch(PASS_THRU),
+        not_found=branch(NOT_FOUND) if input_listing is not None else None,
+    )
+
+
 def setup_prologue(
     df: DataFrame,
     config: KlioJobConfig,
@@ -66,48 +140,10 @@ def setup_prologue(
     output_listing: DataFrame | None = None,
 ) -> PrologueResult:
     """Apply the canonical per-input prologue to an envelope DataFrame."""
-    spark = spark or df.sparkSession
-    job, project = config.job_name, config.project
-
-    # version tag + v1 coercion (run.py prologue; serializer compat §1.1)
-    tagged = tag_message_version(df)
-    df = _union([tagged.process, coerce_v1(tagged.pass_thru)])
-
-    # recipients filter (drops non-addressed messages) + audit append
-    df = check_recipients(df, job, project)
-    df = update_audit_log(df, job, project)
-
-    pass_thrus: list[DataFrame] = []
-
-    # ping split (run.py:330-346)
-    data_in = config.data_inputs[0] if config.data_inputs else None
-    data_out = config.data_outputs[0] if config.data_outputs else None
-
-    ping_split = filter_ping(df, data_input_ping=bool(data_in and data_in.ping))
-    df = ping_split.process
-    pass_thrus.append(ping_split.pass_thru)
-
-    # output-exists → force (run.py:349-378): existing-output rows skip
-    # unless forced; the whole chain is gated on the output's
-    # skip_klio_existence_check flag (run.py _setup_data_io_filters)
-    if data_out is not None and not data_out.skip_klio_existence_check:
-        out_split = check_output_exists(df, data_out, spark, listing=output_listing)
-        force_split = filter_force(
-            out_split.found, data_output_force=bool(data_out.force)
-        )
-        pass_thrus.append(force_split.pass_thru)
-        df = _union([out_split.not_found, force_split.process])
-
-    # input-exists → drop not_found (run.py:380-398)
-    not_found: DataFrame | None = None
-    if data_in is not None and not data_in.skip_klio_existence_check:
-        in_split = check_input_exists(df, data_in, spark, listing=input_listing)
-        df = in_split.found
-        not_found = in_split.not_found
-
-    return PrologueResult(
-        process=df, pass_thru=_union(pass_thrus), not_found=not_found
+    listings = _listings(
+        config, spark or df.sparkSession, input_listing, output_listing
     )
+    return _prologue(df, config, *listings)
 
 
 def setup_prologue_multi(
@@ -117,42 +153,22 @@ def setup_prologue_multi(
 ) -> tuple[dict[str, DataFrame], DataFrame | None, DataFrame | None]:
     """Multi-event-input prologue (run.py:458-486): each input gets the
     canonical chain; user code receives a dict of process streams (the
-    namedtuple-of-pcolls contract); pass-thrus and not-founds flatten."""
-    processed: dict[str, DataFrame] = {}
-    pass_thrus: list[DataFrame] = []
-    not_founds: list[DataFrame] = []
-    # list each data location ONCE and share across inputs — without
-    # this, k event inputs would each trigger their own distributed
-    # metadata scan of the identical data input/output dirs
-    from klio_spark.operators.existence import list_location
+    namedtuple-of-pcolls contract); pass-thrus and not-founds flatten.
 
+    Each data location is listed ONCE and shared across inputs: k event
+    inputs must not each trigger their own metadata scan of the same
+    data input/output dirs."""
     sp = spark or next(iter(inputs.values())).sparkSession
-    data_in = config.data_inputs[0] if config.data_inputs else None
-    data_out = config.data_outputs[0] if config.data_outputs else None
-    in_listing = (
-        list_location(sp, data_in)
-        if data_in is not None and not data_in.skip_klio_existence_check
-        else None
+    in_listing, out_listing = _listings(config, sp)
+    results = {
+        name: _prologue(df, config, in_listing, out_listing)
+        for name, df in inputs.items()
+    }
+    return (
+        {name: r.process for name, r in results.items()},
+        _union([r.pass_thru for r in results.values()]),
+        _union([r.not_found for r in results.values()]),
     )
-    out_listing = (
-        list_location(sp, data_out)
-        if data_out is not None and not data_out.skip_klio_existence_check
-        else None
-    )
-    for name, df in inputs.items():
-        res = setup_prologue(
-            df,
-            config,
-            spark,
-            input_listing=in_listing,
-            output_listing=out_listing,
-        )
-        processed[name] = res.process
-        if res.pass_thru is not None:
-            pass_thrus.append(res.pass_thru)
-        if res.not_found is not None:
-            not_founds.append(res.not_found)
-    return processed, _union(pass_thrus), _union(not_founds)
 
 
 def run_pipeline(

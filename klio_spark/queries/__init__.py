@@ -22,6 +22,7 @@ Cross-engine numeric determinism rules (applied on BOTH sides):
 from __future__ import annotations
 
 import dataclasses
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,7 +113,8 @@ def load(spark: SparkSession, sf_dir: str, *tables: str) -> list[DataFrame]:
             # spark.conf.set works on an existing session, so set it here,
             # immediately before the read resolves the schema.
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        key = (sf_dir, t)
+        # `dir` and `dir/` name the same tables: one memo entry
+        key = (os.path.normpath(sf_dir), t)
         sch = _SCHEMA_MEMO.get(key)
         if sch is None:
             df = spark.read.parquet(f"{sf_dir}/{t}.parquet")

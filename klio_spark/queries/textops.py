@@ -526,20 +526,10 @@ def q132_simhash_portable(spark: SparkSession, sf_dir: str):
     "strings themselves (collision odds ~2^-64 per pair).",
 )
 def q136_substring_dedup(spark: SparkSession, sf_dir: str):
-    from klio_spark.plans.partitioning import fan_out_scan
-
     (d,) = load(spark, sf_dir, "documents")
     k = 8
-    # fan the unsplittable single-row-group scan before the heavy
-    # JVM-only gram pass (tokenize + per-position 8-gram concat +
-    # xxhash64): the q140 carve-out — no Python boundary, so the
-    # batch-5 fan-out objection doesn't apply; profiled r11 at a
-    # 0.53 s single-task map stage (cpuT~runT) on 1 of 32 cores.
-    # Scale-adaptive: a real multi-row-group corpus scans wide and
-    # fan_out_scan is a no-op there.
     toks = (
-        fan_out_scan(d)
-        .select("doc_id", tx.tokens(F.lower(F.col("text"))).alias("tk"))
+        d.select("doc_id", tx.tokens(F.lower(F.col("text"))).alias("tk"))
         .filter(F.size("tk") >= k)
     )
     kg = toks.select(

@@ -3,8 +3,14 @@
 The audio-spectrograms integration pipeline shape
 (integration/audio-spectrograms/run.py:46-120) is reproduced in
 test_full_audio_pipeline: load binary → load audio → stft → spec/mel →
-mfcc, with the CoGroupByKey dance as a self-join on element.
+mfcc. The reference joins its per-feature branches with a CoGroupByKey;
+here get_features computes every feature of a row in one pass, and
+test_one_pass_features_equal_per_op_chain holds it to the per-op chain
+bit for bit.
 """
+
+import io
+import wave
 
 import numpy as np
 import pytest
@@ -14,6 +20,7 @@ from klio_spark import envelope as env
 from klio_spark.audio import (
     dsp,
     get_mel_spec,
+    get_features,
     get_mfcc,
     get_spec,
     get_stft,
@@ -105,11 +112,13 @@ def test_full_audio_pipeline(spark, audio_store):
     assert len(mel.collect()[0].mel_spec) == 20
     assert len(mf.collect()[0].mfcc) == 5
 
-    # CoGroupByKey dance (audio-spectrograms run.py:76-91) = self-join
-    joined = mel.select("element", "mel_spec").join(
-        mf.select("element", "mfcc"), "element"
-    )
-    assert joined.count() == 3
+    # both features of every row in one pass, no join on element
+    feats = get_features(
+        with_bytes.filter(F.col("payload").isNotNull()),
+        n_fft=256, hop_length=128, n_mels=20, n_mfcc=5,
+    ).collect()
+    assert len(feats) == 3
+    assert all(len(r.mel_spec) == 20 and len(r.mfcc) == 5 for r in feats)
 
 
 def test_render_plot_and_upload_roundtrip(spark, audio_store, tmp_path):
@@ -180,3 +189,86 @@ def test_numpy_dsp_matches_spark_path(spark, audio_store):
     expect = dsp.melspectrogram(y, sr, 256, 128, 20).astype(np.float32)
     got = np.array(row.mel_spec, dtype=np.float32)
     np.testing.assert_allclose(got, expect, rtol=1e-5, atol=1e-6)
+
+
+def _pcm_wav(y: np.ndarray, sr: int, width: int, channels: int) -> bytes:
+    """WAV bytes of `y` (frames x channels, in [-1, 1]) at 8 or 16 bits."""
+    if width == 1:
+        pcm = np.clip(np.round(y * 127 + 128), 0, 255).astype(np.uint8)
+    else:
+        pcm = (y * 32767).astype("<i2")
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(channels)
+        w.setsampwidth(width)
+        w.setframerate(sr)
+        w.writeframes(pcm.tobytes())
+    return buf.getvalue()
+
+
+@pytest.fixture()
+def mixed_store(tmp_path):
+    """16-bit mono, 8-bit mono and 16-bit stereo WAVs."""
+    t = np.arange(int(0.3 * SR)) / SR
+    tone = lambda f: 0.7 * np.sin(2 * np.pi * f * t)
+    (tmp_path / "mono16.wav").write_bytes(
+        dsp.synth_wav([440.0], duration_s=0.3, sr=SR, noise=0.005, seed=1))
+    (tmp_path / "mono8.wav").write_bytes(_pcm_wav(tone(330.0), SR, 1, 1))
+    (tmp_path / "stereo16.wav").write_bytes(
+        _pcm_wav(np.stack([tone(220.0), tone(660.0)], axis=1), SR, 2, 2))
+    return str(tmp_path)
+
+
+def _mats(rows, col):
+    """element → the matrix's float32 bytes (None for a null matrix)."""
+    return {
+        r.element: None if r[col] is None
+        else np.array(r[col], dtype=np.float32).tobytes()
+        for r in rows
+    }
+
+
+def test_one_pass_features_equal_per_op_chain(spark, mixed_store):
+    """Differential: get_features equals load_audio → get_stft/get_spec/
+    get_mel_spec/get_mfcc bit for bit on the same store, and keeps a row
+    whose blob is missing with null sr and features."""
+    cfg = DataIOConfig(location=mixed_store, file_suffix=".wav")
+    els = ["mono16", "mono8", "stereo16", "missing"]
+    blobs = load_binary(env.from_elements(spark, els), cfg, spark)
+    kw = dict(n_fft=256, hop_length=128)
+    mel_kw = dict(kw, n_mels=20)
+
+    one = get_features(
+        blobs, ("stft_mag", "stft_phase", "spec", "mel_spec", "mfcc"),
+        n_mfcc=7, **mel_kw,
+    ).collect()
+    assert {r.element for r in one} == set(els)
+    miss = next(r for r in one if r.element == "missing")
+    assert miss.sr is None and miss.mel_spec is None and miss.mfcc is None
+
+    audio = load_audio(blobs)
+    stft_df = get_stft(audio, **kw)
+    per_op = {
+        "stft_mag": stft_df.collect(),
+        "stft_phase": stft_df.collect(),
+        "spec": get_spec(stft_df).collect(),
+        "mel_spec": get_mel_spec(audio, **mel_kw).collect(),
+        "mfcc": get_mfcc(audio, n_mfcc=7, **mel_kw).collect(),
+    }
+    assert {r.element: r.sr for r in one} == {
+        r.element: r.sr for r in per_op["mel_spec"]}
+    for col, rows in per_op.items():
+        want = _mats(rows, col)
+        assert want["missing"] is None, col
+        assert _mats(one, col) == want, col
+
+
+def test_get_features_subset_and_unknown_name(spark, mixed_store):
+    """A feature subset gives only those columns; an unknown name fails
+    before any job runs."""
+    cfg = DataIOConfig(location=mixed_store, file_suffix=".wav")
+    blobs = load_binary(env.from_elements(spark, ["mono8"]), cfg, spark)
+    out = get_features(blobs, ("mfcc",), n_fft=256, hop_length=128, n_mels=20)
+    assert out.columns[-2:] == ["sr", "mfcc"] and "payload" not in out.columns
+    with pytest.raises(ValueError):
+        get_features(blobs, ("chroma",))

@@ -132,3 +132,29 @@ def test_schema_memo_is_metadata_only_and_cleared_for_controls(spark, sf_dir):
         "bench.py no longer clears the schema memo for control reps — "
         "control_ratio would measure the memo, not the host"
     )
+
+
+def test_schema_memo_keys_normalized_dir(spark, sf_dir):
+    """`dir` and `dir/` name the same tables and share one memo entry."""
+    from klio_spark.queries import _SCHEMA_MEMO, load
+
+    _SCHEMA_MEMO.clear()
+    load(spark, sf_dir, "nation")
+    load(spark, sf_dir.rstrip("/") + "/", "nation")
+    assert [k for k in _SCHEMA_MEMO if k[1] == "nation"] == [
+        (os.path.normpath(sf_dir), "nation")
+    ]
+
+
+def test_core_sec_dropped_when_best_rep_read_fails():
+    """A new best rep whose counter read fails must not keep the older
+    rep's core_sec beside its own wall time."""
+    import bench
+
+    core_sec = {}
+    bench._record_core_sec(core_sec, "q", 1000, 3500)
+    assert core_sec == {"q": 2.5}
+    bench._record_core_sec(core_sec, "q", 1000, None)
+    assert core_sec == {}
+    bench._record_core_sec(core_sec, "q", None, 10)
+    assert core_sec == {}

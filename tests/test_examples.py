@@ -4,6 +4,7 @@ assert outputs)."""
 
 import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,16 +41,31 @@ def test_audio_features_job(spark, tmp_path):
     (job / "input").mkdir()
     (job / "audio").mkdir()
     (job / "input" / "track_ids.txt").write_text("t0\nt1\nt-missing\n")
-    for i in range(2):
-        (job / "audio" / f"t{i}.wav").write_bytes(
-            dsp.synth_wav([330.0 * (i + 1)], 0.3, 8000, seed=i)
-        )
+    wavs = {
+        f"t{i}": dsp.synth_wav([330.0 * (i + 1)], 0.3, 8000, noise=0.01, seed=i)
+        for i in range(2)
+    }
+    for el, raw in wavs.items():
+        (job / "audio" / f"{el}.wav").write_bytes(raw)
     assert cli.main(["job", "run", "--config", str(job / "klio-job.yaml")]) == 0
     assert _lines(job / "output") == ["t0", "t1"]  # missing id dropped
     feats = spark.read.parquet(str(job / "output_features"))
     rows = {r.element: r for r in feats.collect()}
     assert set(rows) == {"t0", "t1"}
-    assert len(rows["t0"].mel_spec) == 32 and len(rows["t0"].mfcc) == 8
+    # the features equal direct numpy on the same bytes (run.py's params)
+    for el, raw in wavs.items():
+        y, sr = dsp.decode_wav(raw)
+        assert rows[el].sr == sr
+        for col, want in (
+            ("mel_spec", dsp.melspectrogram(y, sr, 512, 256, 32)),
+            ("mfcc", dsp.mfcc(y, sr, 8, 512, 256, 32)),
+        ):
+            got = np.array(rows[el][col], dtype=np.float32)
+            want = want.astype(np.float32)
+            assert got.shape == want.shape == ((32 if col == "mel_spec" else 8), 10)
+            np.testing.assert_allclose(
+                got, want, rtol=1e-5, atol=1e-6 * np.abs(want).max(), err_msg=col
+            )
 
 
 def test_docs_dedup_job(spark, tmp_path):

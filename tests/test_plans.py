@@ -5,6 +5,8 @@ pruning, broadcast choice, shuffle count. If a refactor regresses one of
 these, the suite fails even though results stay correct.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -569,3 +571,84 @@ def test_q269_windows_ride_cell_frame(spark, sf_dir, specs):
     c = _node_counts(plans.plan_str(df))
     assert c["Window"] == 3, c
     assert c["Exchange"] <= 2, c
+
+
+# -- the klio job path: one pass per op -----------------------------------
+
+@pytest.fixture()
+def audio_job(spark, tmp_path):
+    """examples/audio-features staged with a data output, so both
+    existence listings join, and JSON-wire events, so ping / force /
+    version are data rather than constants Catalyst folds away:
+    (config, events, the example module)."""
+    import importlib.util
+    import json
+    import os
+    import shutil
+
+    from klio_spark import cli
+    from klio_spark.audio import dsp
+    from klio_spark.sources import read_event_input
+
+    job = tmp_path / "job"
+    example = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "examples", "audio-features",
+    )
+    shutil.copytree(example, job)
+    for d in ("input", "audio", "done"):
+        (job / d).mkdir()
+    (job / "input" / "track_ids.txt").write_text("".join(
+        json.dumps({"element": el, "version": 2, "force": force, "ping": ping,
+                    "recipients_mode": "anyone", "job_audit_log": []}) + "\n"
+        for el, force, ping in [("t0", False, False), ("t1", False, True),
+                                ("t2", True, False), ("missing", False, False)]
+    ))
+    for i in range(3):
+        (job / "audio" / f"t{i}.wav").write_bytes(
+            dsp.synth_wav([330.0 * (i + 1)], 0.1, 8000, seed=i)
+        )
+    (job / "done" / "t2.npy").write_bytes(b"x")
+    yaml = (job / "klio-job.yaml").read_text()
+    (job / "klio-job.yaml").write_text(
+        yaml.replace("location: input/track_ids.txt",
+                     "location: input/track_ids.txt\n        wire: true"))
+    with open(job / "klio-job.yaml", "a") as f:
+        f.write("    outputs:\n      - type: file\n        location: done\n"
+                "        file_suffix: .npy\n")
+    _, config = cli._build(str(job / "klio-job.yaml"))
+    spec = importlib.util.spec_from_file_location("audio_run", job / "run.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return config, read_event_input(spark, config.event_inputs[0]), mod
+
+
+def test_job_prologue_scans_events_once_per_branch(spark, audio_job):
+    """The prologue is one tagged stream: `process` reads the event
+    source once, and the event write (process ∪ pass_thru) at most
+    twice — no branch re-derives another through a union."""
+    from klio_spark.operators import run_pipeline, setup_prologue
+
+    config, events, _ = audio_job
+    process = setup_prologue(events, config, spark).process
+    s = plans.plan_str(process, "simple")
+    assert s.count("FileScan text") == 1, s
+    out = run_pipeline(events, config, lambda df, cfg: df, spark)
+    s = plans.plan_str(out, "simple")
+    assert s.count("FileScan text") <= 2, s
+    assert plans.num_shuffles(out) == 0, s
+
+
+def test_audio_features_one_python_pass_no_join(spark, audio_job):
+    """The example's feature write: one MapInPandas computes mel and
+    MFCC together, and nothing joins or shuffles after it."""
+    from klio_spark.operators import setup_prologue
+
+    config, events, mod = audio_job
+    feats = mod.features(setup_prologue(events, config, spark).process, config)
+    s = plans.plan_str(feats, "simple")
+    python_nodes = re.findall(
+        r"MapInPandas|ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas", s)
+    assert python_nodes == ["MapInPandas"], s
+    above = s[: s.index("MapInPandas")]
+    assert "Join" not in above and "Exchange" not in above, s
