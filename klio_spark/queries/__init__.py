@@ -401,7 +401,6 @@ _DRIVER_GREEN = [
     "q71_ann_lsh_topk",
     "q72_embedding_near_dups",
     "q74_ann_ivf_topk",
-    "q106_minhash_lsh_recall",
     "q108_event_funnel",
     "q121_centroid_similarity",
     "q129_minhash_bucket_table",

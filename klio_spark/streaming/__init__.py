@@ -16,13 +16,28 @@ Reference semantics covered:
 Extension ops (klio has no windowing — SURVEY §2.5): tumbling/sliding/
 session windows with watermarks for late data, for the events-style
 tables.
+
+Stateful ops (``stateful_*``) are all one keyed-state fold,
+``_keyed_fold`` — the Structured Streaming paper's single general
+stateful operator (mapGroupsWithState) over applyInPandasWithState. It
+owns the per-group plumbing (chunk concat in arrival order, NaT and
+required-NULL drops, timestamp/id/cents extraction, the declared
+stable sort, state read/init/write-back, timeouts, and the output and
+state schemas with the key's own type), so an op is a pure
+``step(key, state, events) -> (state, rows)`` fold plus one
+``_keyed_fold`` call. Adding a stateful op means writing a step, never
+another applyInPandasWithState call site. Complete/append-mode
+monitors go through ``foreach_batch_sink``.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from klio_spark.envelope import LIMITED, job_lit
 
@@ -162,6 +177,133 @@ def session_windows(
     )
 
 
+# NULL ids sort first among same-time ties (the batch windows' NULLS FIRST)
+_NULL_ID = -(2**63)
+# timestamp units as divisors of epoch nanoseconds
+_NS_PER = {"us": 1_000, "s": 1_000_000_000, "day": 86_400_000_000_000}
+
+
+def _column(a, null, kind: str):
+    """One event field as a numpy array (``a`` a column's values,
+    ``null`` its NULL mask): a timestamp kind ("us"/"s"/"day") floors
+    epoch nanoseconds by array floor division (pre-1970 instants floor,
+    like Timestamp.value // unit); "id" maps NULL to _NULL_ID; "cents"
+    is floor(v*100.0); any other kind passes values through. NULL
+    cents and pass-through values become None."""
+    import numpy as np
+
+    if kind in _NS_PER:
+        return a.astype("datetime64[ns]").view("int64") // _NS_PER[kind]
+    if kind == "id":
+        out = np.where(null, 0, a).astype("int64")
+        out[null] = _NULL_ID
+        return out
+    if kind == "cents":
+        c = np.floor(np.where(null, 0.0, a).astype("float64") * 100.0)
+        if (np.abs(c) >= 2.0**63).any():  # inf too: no int64 cents
+            raise OverflowError("value out of the int64 cents range")
+        a = c.astype("int64")
+    if null.any():
+        a = a.astype(object)
+        a[null] = None
+    return a
+
+
+def _events(pdfs, fields, required, order) -> list[tuple]:
+    """A group's micro-batch rows as event tuples in ``fields`` order:
+    chunks concatenated in arrival order, rows with a NaT timestamp or a
+    NULL ``required`` field dropped, then stable-sorted on ``order``
+    (arrival order breaks full ties)."""
+    import numpy as np
+    import pandas as pd
+
+    chunks = list(pdfs)
+    if not chunks:
+        return []
+    pdf = chunks[0]
+    if len(chunks) > 1:
+        pdf = pd.concat(chunks, ignore_index=True)
+    vals = {name: pdf[name].to_numpy() for name, _ in fields}
+    nulls = {name: pd.isna(a) for name, a in vals.items()}
+    keep = np.ones(len(pdf), dtype=bool)
+    for name, kind in fields:
+        if kind in _NS_PER or name in required:
+            keep &= ~nulls[name]
+    if not keep.all():
+        vals = {name: a[keep] for name, a in vals.items()}
+        nulls = {name: m[keep] for name, m in nulls.items()}
+    cols = {
+        name: _column(vals[name], nulls[name], kind) for name, kind in fields
+    }
+    if order:
+        idx = np.lexsort([cols[name] for name in reversed(order)])
+        cols = {name: c[idx] for name, c in cols.items()}
+    return list(zip(*(c.tolist() for c in cols.values())))
+
+
+def _group_fold(step, names, init, fields=(), required=(), order=(),
+                timeout=None):
+    """The pandas-level body of :func:`_keyed_fold`, one call per group
+    per trigger: ``(key, pdfs, state) -> iterator of output frames``.
+
+    A timed-out group calls ``step(key, held_state, None)``. Otherwise
+    the group's rows become events (see :func:`_events`); a group with
+    no valid event leaves its state as is, re-arming the timeout of a
+    held state. ``step`` gets the held state, or ``init`` for a new key,
+    and returns ``(new_state, rows)``: new_state None removes the state,
+    and a new key whose state stays ``init`` stores nothing. Each row is
+    a tuple of the non-key output columns; the key is prepended."""
+    kind, deadline = timeout or (None, None)
+
+    def update(key, pdfs, state):
+        import pandas as pd
+
+        if state.hasTimedOut:
+            new, rows = step(key[0], state.get, None)
+        else:
+            held = state.get if state.exists else init
+            ev = _events(pdfs, fields, required, order)
+            new, rows = step(key[0], held, ev) if ev else (held, [])
+        if new is None:
+            state.remove()
+        elif state.exists or new != init:
+            state.update(new)
+            if kind == GroupStateTimeout.ProcessingTimeTimeout:
+                state.setTimeoutDuration(deadline(new))
+            elif kind == GroupStateTimeout.EventTimeTimeout:
+                state.setTimeoutTimestamp(deadline(new))
+        if rows:
+            yield pd.DataFrame([(key[0], *r) for r in rows], columns=names)
+
+    return update
+
+
+def _keyed_fold(df: DataFrame, key_col: str, step, out: str, state: str,
+                init, *, fields=(), required=(), order=(), timeout=None,
+                mode: str = "append") -> DataFrame:
+    """The one keyed-state fold behind every stateful op: group ``df``
+    by ``key_col`` and fold each group's micro-batches through ``step``
+    (see :func:`_group_fold`) with checkpoint-durable state.
+
+    ``out`` and ``state`` are the DDL of the non-key output columns and
+    of the state; the output's key column keeps the key's OWN type (a
+    string-keyed stream must not be cast through a default long).
+    ``fields`` is a sequence of (column, kind) pairs naming the event
+    tuple's fields (kinds as in :func:`_column`), ``required`` the
+    columns whose NULL drops a row, ``order`` the sort columns.
+    ``timeout`` is None or (GroupStateTimeout kind, fn(state) -> the
+    duration or event-time deadline in ms)."""
+    key_type = df.schema[key_col].dataType.simpleString()
+    names = [key_col] + [c.split()[0] for c in out.split(",")]
+    return df.groupBy(key_col).applyInPandasWithState(
+        _group_fold(step, names, init, fields, required, order, timeout),
+        outputStructType=f"{key_col} {key_type}, {out}",
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=timeout[0] if timeout else GroupStateTimeout.NoTimeout,
+    )
+
+
 def stateful_element_counts(df: DataFrame) -> DataFrame:
     """Custom stateful operator: running per-element totals across
     micro-batches via applyInPandasWithState (the applyInPandasWithState
@@ -172,26 +314,14 @@ def stateful_element_counts(df: DataFrame) -> DataFrame:
     State = one long per element, checkpoint-durable; emits
     (element, total_seen, batch_seen) each time the element appears.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key, pdfs, state: GroupState):
-        batch = 0
-        for pdf in pdfs:
-            batch += len(pdf)
-        (total,) = state.get if state.exists else (0,)
-        total += batch
-        state.update((total,))
-        yield pd.DataFrame(
-            {"element": [key[0]], "total_seen": [total], "batch_seen": [batch]}
-        )
+    def step(_, st, ev):
+        total = st[0] + len(ev)
+        return (total,), [(total, len(ev))]
 
-    return df.groupBy("element").applyInPandasWithState(
-        update,
-        outputStructType="element string, total_seen long, batch_seen long",
-        stateStructType="total long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, "element", step, "total_seen long, batch_seen long",
+        "total long", (0,), fields=(("element", "raw"),),
     )
 
 
@@ -214,42 +344,22 @@ def stateful_funnel(
     stage cannot advance (same strict-ordering rule the batch query
     applies, evaluated on arrival order across batches — the documented
     streaming relaxation)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     stage_list = list(stages)
 
-    def update(key, pdfs, state: GroupState):
-        (stage, t) = state.get if state.exists else (0, -1)
-        evs = []
-        for pdf in pdfs:
-            for ts, et in zip(pdf[ts_col], pdf[type_col]):
-                evs.append((int(pd.Timestamp(ts).value // 1000), str(et)))
-        evs.sort()
-        out = []
-        for tm, et in evs:
+    # same-time ties cannot matter: only one event per instant advances
+    def step(_, st, ev):
+        stage, t = st
+        rows = []
+        for tm, et in ev:
             if stage < len(stage_list) and et == stage_list[stage] and tm > t:
-                stage += 1
-                t = tm
-                out.append((key[0], stage, stage_list[stage - 1], tm))
-        state.update((stage, t))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[user_col, "stage", "stage_name", "ts_micros"]
-            )
+                stage, t = stage + 1, tm
+                rows.append((stage, et, tm))
+        return (stage, t), rows
 
-    # the key column keeps ITS OWN type in the output — a string-keyed
-    # stream must not be cast through the default long
-    key_type = df.schema[user_col].dataType.simpleString()
-    return df.groupBy(user_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{user_col} {key_type}, stage int, stage_name string,"
-            " ts_micros long"
-        ),
-        stateStructType="stage int, t long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, user_col, step, "stage int, stage_name string, ts_micros long",
+        "stage int, t long", (0, -1),
+        fields=((ts_col, "us"), (type_col, "raw")), order=(ts_col,),
     )
 
 
@@ -274,48 +384,25 @@ def stateful_keep_latest(
     are EVICTED and emit a tombstone row (latest_ts_micros = -1) so the
     downstream merge can expire them too. Uses processing-time timeouts,
     the applyInPandasWithState analog of a state-store TTL."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
+    def step(_, st, ev):
+        if ev is None:
             # idle eviction: drop state, emit a tombstone for the key
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "latest_ts_micros": [-1],
-                    "latest_value": [None],
-                }
-            )
-            return
-        (t, v) = state.get if state.exists else (-1, None)
+            return None, [(-1, None)]
+        t, v = st
         changed = False
-        for pdf in pdfs:
-            for ts, val in zip(pdf[ts_col], pdf[value_col]):
-                tm = int(pd.Timestamp(ts).value // 1000)
-                if tm > t:
-                    t, v, changed = tm, str(val), True
-        state.update((t, v))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        if changed:
-            yield pd.DataFrame(
-                {key_col: [key[0]], "latest_ts_micros": [t], "latest_value": [v]}
-            )
+        for tm, val in ev:  # arrival order: the first of equal times wins
+            if tm > t:
+                # a NULL value stays NULL (q113's rn=1 row keeps it)
+                t, v, changed = tm, None if val is None else str(val), True
+        return (t, v), [(t, v)] if changed else []
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, latest_ts_micros long, latest_value string"
-        ),
-        stateStructType="t long, v string",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
+    return _keyed_fold(
+        df, key_col, step, "latest_ts_micros long, latest_value string",
+        "t long, v string", (-1, None),
+        fields=((ts_col, "us"), (value_col, "raw")),
+        timeout=None if idle_timeout_ms is None else (
+            GroupStateTimeout.ProcessingTimeTimeout, lambda st: idle_timeout_ms
         ),
     )
 
@@ -336,45 +423,29 @@ def stateful_retention(
     State is two ints per user. Week offsets only move forward: an
     out-of-order event from an already-emitted week (or before the
     first-seen day) is absorbed, the same arrival-order relaxation as
-    stateful_funnel."""
+    stateful_funnel. NaT timestamps are skipped."""
     import datetime as dt
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     epoch_day = dt.date.fromisoformat(epoch).toordinal()
+    # state keeps proleptic ordinals; events arrive as days since 1970
+    ord_1970 = dt.date(1970, 1, 1).toordinal()
 
-    def update(key, pdfs, state: GroupState):
-        (d0, last) = state.get if state.exists else (-1, -1)
-        days = set()
-        for pdf in pdfs:
-            for ts in pdf[ts_col]:
-                days.add(pd.Timestamp(ts).date().toordinal())
-        if not days:
-            return
+    def step(_, st, ev):
+        d0, last = st
+        days = sorted({d + ord_1970 for (d,) in ev})
         if d0 < 0:
-            d0 = min(days)
-        out = []
-        for d in sorted(days):
+            d0 = days[0]
+        rows = []
+        for d in days:
             off = (d - d0) // 7
             if off > last:
                 last = off
-                out.append((key[0], (d0 - epoch_day) // 7, off))
-        state.update((d0, last))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[user_col, "cohort_week", "week_offset"]
-            )
+                rows.append(((d0 - epoch_day) // 7, off))
+        return (d0, last), rows
 
-    key_type = df.schema[user_col].dataType.simpleString()
-    return df.groupBy(user_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{user_col} {key_type}, cohort_week int, week_offset int"
-        ),
-        stateStructType="d0 long, last long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, user_col, step, "cohort_week int, week_offset int",
+        "d0 long, last long", (-1, -1), fields=((ts_col, "day"),),
     )
 
 
@@ -403,52 +474,27 @@ def stateful_transitions(
     preserved as NULL (q148 LAG semantics): it emits as a NULL
     next_type and suppresses the following event's transition — never
     the string 'None'."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    # sort on (time, id) only — the batch window's ORDER BY; the type
+    # must not act as a tie-break. A NULL event_type stays None, so
+    # X→NULL emits a NULL next_type and NULL→Y is dropped (prev None),
+    # exactly q148's batch LAG + `prev IS NOT NULL` semantics
+    ids = () if id_col is None else (id_col,)
 
-    def update(key, pdfs, state: GroupState):
-        evs = []
-        for pdf in pdfs:
-            ids = pdf[id_col] if id_col is not None else [0] * len(pdf)
-            for ts, eid, et in zip(pdf[ts_col], ids, pdf[type_col]):
-                t = pd.Timestamp(ts)
-                if t is not pd.NaT and not pd.isna(t):
-                    ik = -(2**63) if pd.isna(eid) else int(eid)
-                    # NULL event_type passes through as None — NOT
-                    # str()-coerced to 'None' — so X→NULL transitions
-                    # emit with a NULL next_type and NULL→Y transitions
-                    # are dropped (prev None), exactly matching q148's
-                    # batch LAG + `prev IS NOT NULL` semantics
-                    ev = None if pd.isna(et) else str(et)
-                    evs.append((int(t.value // 1000), ik, ev))
-        if not evs:
-            return
-        # sort on (time, id) only — the batch window's ORDER BY; the
-        # type must not act as a tie-break (None isn't comparable anyway)
-        evs.sort(key=lambda x: (x[0], x[1]))
-        (prev_e,) = state.get if state.exists else (None,)
-        out = []
-        for tm, _ik, et in evs:
-            if prev_e is not None:
-                out.append((key[0], prev_e, et, tm))
-            prev_e = et
-        state.update((prev_e,))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[user_col, "prev_type", "next_type", "ts_micros"],
-            )
+    def step(_, st, ev):
+        (prev,) = st
+        rows = []
+        for tm, *_, et in ev:
+            if prev is not None:
+                rows.append((prev, et, tm))
+            prev = et
+        return (prev,), rows
 
-    key_type = df.schema[user_col].dataType.simpleString()
-    return df.groupBy(user_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{user_col} {key_type}, prev_type string, next_type string,"
-            " ts_micros long"
-        ),
-        stateStructType="e string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, user_col, step,
+        "prev_type string, next_type string, ts_micros long", "e string",
+        (None,), fields=((ts_col, "us"), *((c, "id") for c in ids),
+                         (type_col, "raw")),
+        order=(ts_col, *ids),
     )
 
 
@@ -475,53 +521,23 @@ def stateful_scd2(
     the open version folds in arrival order (the stateful_funnel
     relaxation). NaT timestamps are skipped; values integerize to
     cents via floor(value*100) exactly like the batch query."""
-    import math
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        evs = []
-        for pdf in pdfs:
-            for ts, eid, val in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
-                t = pd.Timestamp(ts)
-                if t is not pd.NaT and not pd.isna(t):
-                    ik = -(2**63) if pd.isna(eid) else int(eid)
-                    cents = (
-                        None if pd.isna(val) else int(math.floor(val * 100.0))
-                    )
-                    # t.value is NANOseconds since epoch → whole seconds
-                    evs.append((int(t.value // 1_000_000_000), ik, cents))
-        if not evs:
-            return
-        evs.sort(key=lambda x: (x[0], x[1]))
-        ver, vfrom, cents = state.get if state.exists else (0, None, None)
-        out = []
-        for t_s, _ik, c in evs:
+    def step(_, st, ev):
+        ver, vfrom, cents = st
+        rows = []
+        for t_s, _, c in ev:
             if ver > 0:
-                out.append((key[0], ver, vfrom, t_s, False, cents))
-            ver += 1
-            vfrom, cents = t_s, c
-        state.update((ver, vfrom, cents))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    key_col, "version", "valid_from_s", "valid_to_s",
-                    "is_current", "value_cents",
-                ],
-            )
+                rows.append((ver, vfrom, t_s, False, cents))
+            ver, vfrom, cents = ver + 1, t_s, c
+        return (ver, vfrom, cents), rows
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, version long, valid_from_s long,"
-            " valid_to_s long, is_current boolean, value_cents long"
-        ),
-        stateStructType="ver long, vfrom long, cents long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, key_col, step,
+        "version long, valid_from_s long, valid_to_s long,"
+        " is_current boolean, value_cents long",
+        "ver long, vfrom long, cents long", (0, None, None),
+        fields=((ts_col, "s"), (id_col, "id"), (value_col, "cents")),
+        order=(ts_col, id_col),
     )
 
 
@@ -542,79 +558,45 @@ def stateful_sessionize(
       * timeout: when the EVENT-TIME watermark passes last+gap, the open
         session closes with no further input — GroupStateTimeout.
         EventTimeTimeout, the slot that distinguishes a sessionizer from
-        the NoTimeout state machines above (a user who never returns
-        still gets their session emitted, checkpoint-durable).
+        an untimed fold (a user who never returns still gets their
+        session emitted, checkpoint-durable).
 
     Emitted rows are final (append mode): a session emits exactly once,
     on close. NaT timestamps are skipped. Micro-batch events sort by
     time before folding — the same arrival-order relaxation as
     stateful_funnel for cross-batch stragglers."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     gap_us = gap_minutes * 60 * 1_000_000
 
-    def update(key, pdfs, state: GroupState):
-        out = []
-        if state.hasTimedOut:
-            s0, s1, n = state.get
-            out.append((key[0], s0, s1, n))
-            state.remove()
-        else:
-            evs = []
-            for pdf in pdfs:
-                for ts in pdf[ts_col]:
-                    t = pd.Timestamp(ts)
-                    if t is not pd.NaT and not pd.isna(t):
-                        evs.append(int(t.value // 1000))
-            evs.sort()
-            # Fold the carried state session and this batch's events as
-            # intervals sorted by start. An admitted straggler older than
-            # the carried s0 must move the session start BACK (within gap)
-            # or form its own, already-closed, older session (beyond gap);
-            # folding only on s1 would swallow it into the newer session
-            # and emit a start that postdates a member event.
-            items = [(tm, tm, 1) for tm in evs]
-            if state.exists:
-                items.append(state.get)
-            items.sort()
-            s0, s1, n = None, None, 0
-            for t0, t1, cnt in items:
-                if s0 is None:
-                    s0, s1, n = t0, t1, cnt
-                elif t0 - s1 <= gap_us:
-                    s1, n = max(s1, t1), n + cnt
-                else:
-                    out.append((key[0], s0, s1, n))
-                    s0, s1, n = t0, t1, cnt
-            if s0 is not None:
-                state.update((s0, s1, n))
-                # event-time timeout takes epoch MILLIS, must exceed the
-                # current watermark (it does: s1 is in this batch or the
-                # state predates it)
-                state.setTimeoutTimestamp(s1 // 1000 + gap_minutes * 60000)
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    user_col, "session_start_us", "session_end_us", "n_events"
-                ],
-            )
+    def step(_, st, ev):
+        if ev is None:  # the watermark passed last + gap: close it
+            return None, [st]
+        # Fold the carried state session and this batch's events as
+        # intervals sorted by start. An admitted straggler older than
+        # the carried s0 must move the session start BACK (within gap)
+        # or form its own, already-closed, older session (beyond gap);
+        # folding only on s1 would swallow it into the newer session
+        # and emit a start that postdates a member event.
+        items = sorted([(tm, tm, 1) for (tm,) in ev] + ([st] if st else []))
+        rows = []
+        s0, s1, n = items[0]
+        for t0, t1, cnt in items[1:]:
+            if t0 - s1 <= gap_us:
+                s1, n = max(s1, t1), n + cnt
+            else:
+                rows.append((s0, s1, n))
+                s0, s1, n = t0, t1, cnt
+        return (s0, s1, n), rows
 
-    key_type = df.schema[user_col].dataType.simpleString()
-    return (
-        df.withWatermark(ts_col, f"{gap_minutes} minutes")
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=(
-                f"{user_col} {key_type}, session_start_us long,"
-                " session_end_us long, n_events long"
-            ),
-            stateStructType="s0 long, s1 long, n long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    # event-time timeout takes epoch MILLIS, must exceed the current
+    # watermark (it does: s1 is in this batch or the state predates it)
+    return _keyed_fold(
+        df.withWatermark(ts_col, f"{gap_minutes} minutes"), user_col, step,
+        "session_start_us long, session_end_us long, n_events long",
+        "s0 long, s1 long, n long", None, fields=((ts_col, "us"),),
+        timeout=(
+            GroupStateTimeout.EventTimeTimeout,
+            lambda st: st[1] // 1000 + gap_minutes * 60000,
+        ),
     )
 
 
@@ -878,14 +860,10 @@ def streaming_psi_drift(
         )
         sink(psi_from_counts(c, key_col), batch_id)
 
-    writer = (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        counts, batch_fn, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_ks_drift(
@@ -926,14 +904,10 @@ def streaming_ks_drift(
         )
         sink(ks_from_counts(c, key_col), batch_id)
 
-    writer = (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        counts, batch_fn, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stateful_cusum(
@@ -962,55 +936,29 @@ def stateful_cusum(
     batch events sort by (ts, id) — the suite's deterministic order;
     cross-batch stragglers fold in arrival order (the stateful_funnel
     relaxation). NaT timestamps and NULL values are skipped."""
-    import math
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        evs = []
-        for pdf in pdfs:
-            for ts, eid, val in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
-                t = pd.Timestamp(ts)
-                if t is not pd.NaT and not pd.isna(t) and not pd.isna(val):
-                    ik = -(2**63) if pd.isna(eid) else int(eid)
-                    cents = int(math.floor(val * 100.0))
-                    evs.append((int(t.value // 1000), ik, cents))
-        if not evs:
-            return
-        evs.sort(key=lambda x: (x[0], x[1]))
-        s_hi, s_lo, n = state.get if state.exists else (0, 0, 0)
-        out = []
-        for tm, _ik, x in evs:
+    def step(_, st, ev):
+        s_hi, s_lo, n = st
+        rows = []
+        for tm, _, x in ev:
             n += 1
             s_hi = max(0, s_hi + (x - target_cents - slack_cents))
             s_lo = min(0, s_lo + (x - target_cents + slack_cents))
             if s_hi > threshold_cents:
-                out.append((key[0], tm, "up", s_hi, n))
+                rows.append((tm, "up", s_hi, n))
                 s_hi, n = 0, 0
             if s_lo < -threshold_cents:
-                out.append((key[0], tm, "down", -s_lo, n))
+                rows.append((tm, "down", -s_lo, n))
                 s_lo, n = 0, 0
-        state.update((s_hi, s_lo, n))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    key_col, "ts_micros", "direction",
-                    "statistic_cents", "n_since_reset",
-                ],
-            )
+        return (s_hi, s_lo, n), rows
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, ts_micros long, direction string,"
-            " statistic_cents long, n_since_reset long"
-        ),
-        stateStructType="shi long, slo long, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, key_col, step,
+        "ts_micros long, direction string, statistic_cents long,"
+        " n_since_reset long",
+        "shi long, slo long, n long", (0, 0, 0),
+        fields=((ts_col, "us"), (id_col, "id"), (value_col, "cents")),
+        required=(value_col,), order=(ts_col, id_col),
     )
 
 
@@ -1040,29 +988,13 @@ def stateful_ewma(
     post-update value; divide by 2^20 at serving time. Within a batch
     events sort by (ts, id); NaT/NULL rows are skipped (the
     stateful_cusum conventions)."""
-    import math
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     two_a = 1 << alpha_log2
     scale = 1 << 20
 
-    def update(key, pdfs, state: GroupState):
-        evs = []
-        for pdf in pdfs:
-            for ts, eid, val in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
-                t = pd.Timestamp(ts)
-                if t is not pd.NaT and not pd.isna(t) and not pd.isna(val):
-                    ik = -(2**63) if pd.isna(eid) else int(eid)
-                    cents = int(math.floor(val * 100.0))
-                    evs.append((int(t.value // 1000), ik, cents))
-        if not evs:
-            return
-        evs.sort(key=lambda x: (x[0], x[1]))
-        (y, n) = state.get if state.exists else (0, 0)
-        out = []
-        for tm, eid, x in evs:
+    def step(_, st, ev):
+        y, n = st
+        rows = []
+        for tm, eid, x in ev:
             if n == 0:
                 y = x * scale
             else:
@@ -1070,23 +1002,15 @@ def stateful_ewma(
                 q = abs(num) // two_a
                 y = q if num >= 0 else -q
             n += 1
-            out.append((key[0], eid, tm, y, n))
-        state.update((y, n))
-        yield pd.DataFrame(
-            out,
-            columns=[key_col, id_col, "ts_micros", "ewma_scaled", "n_seen"],
-        )
+            rows.append((eid, tm, y, n))
+        return (y, n), rows
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, {id_col} long, ts_micros long,"
-            " ewma_scaled long, n_seen long"
-        ),
-        stateStructType="y long, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, key_col, step,
+        f"{id_col} long, ts_micros long, ewma_scaled long, n_seen long",
+        "y long, n long", (0, 0),
+        fields=((ts_col, "us"), (id_col, "id"), (value_col, "cents")),
+        required=(value_col,), order=(ts_col, id_col),
     )
 
 
@@ -1163,17 +1087,10 @@ def streaming_quantile_sketch(
         )
     )
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        sink(batch.select(group_col, "kll_sketch"), batch_id)
-
-    writer = (
-        sketches.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        sketches, sink, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_countmin(
@@ -1224,17 +1141,10 @@ def streaming_countmin(
         .agg(F.count(F.lit(1)).cast("bigint").alias("cm_count"))
     )
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        sink(batch.select("cm_row", "cm_bucket", "cm_count"), batch_id)
-
-    writer = (
-        counters.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        counters, sink, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def mg_fold(
@@ -1290,49 +1200,27 @@ def stateful_heavy_hitters(
     (state-schema typing; cast back at the consumer if needed)."""
     from collections import Counter
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     keyed = df.filter(F.col(key_col).isNotNull()).select(
         F.col(key_col).cast("string").alias("_key"),
         F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_shards))
         .cast("int")
-        .alias("_shard"),
+        .alias("shard"),
     )
 
-    def update(key, pdfs, state: GroupState):
-        batch: Counter = Counter()
-        for pdf in pdfs:
-            batch.update(pdf["_key"].tolist())
-        if not batch:
-            return
-        keys, counts, n, d = (
-            state.get if state.exists else ([], [], 0, 0)
-        )
-        n += sum(int(c) for c in batch.values())
+    def step(_, st, ev):
+        batch = Counter(k for (k,) in ev)
+        keys, counts, n, d = st
         merged, d = mg_fold(dict(zip(keys, counts)), batch, capacity, d)
+        n += len(ev)
         ks = sorted(merged)  # deterministic state + emission order
-        state.update((ks, [merged[k] for k in ks], n, d))
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]] * len(ks),
-                "key": ks,
-                "est": [merged[k] for k in ks],
-                "n_shard": [n] * len(ks),
-                "err_bound": [d] * len(ks),
-            }
-        )
+        rows = [(k, merged[k], n, d) for k in ks]
+        return (ks, [merged[k] for k in ks], n, d), rows
 
-    return keyed.groupBy("_shard").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "shard int, key string, est long, n_shard long, err_bound long"
-        ),
-        stateStructType=(
-            "keys array<string>, counts array<long>, n long, d long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed, "shard", step,
+        "key string, est long, n_shard long, err_bound long",
+        "keys array<string>, counts array<long>, n long, d long",
+        ([], [], 0, 0), fields=(("_key", "raw"),), mode="update",
     )
 
 
@@ -1448,17 +1336,10 @@ def streaming_vocab_growth(
         F.explode(tokens(F.lower(F.col(text_col)))).alias("w")
     ).dropDuplicates(["w"])
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        sink(batch, batch_id)
-
-    writer = (
-        words.writeStream.outputMode("append")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        words, sink, checkpoint_dir, trigger_available_now,
+        output_mode="append",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stateful_attribution(
@@ -1491,64 +1372,29 @@ def stateful_attribution(
     mode: attributed rows are final (reference: klio's transforms are
     per-element and stateless — this models what its users hand-roll
     downstream)."""
-    import math
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        evs = []
-        for pdf in pdfs:
-            for ts, eid, et, val in zip(
-                pdf[ts_col], pdf[id_col], pdf[type_col], pdf[value_col]
-            ):
-                t = pd.Timestamp(ts)
-                if t is not pd.NaT and not pd.isna(t):
-                    ik = -(2**63) if pd.isna(eid) else int(eid)
-                    evs.append(
-                        (
-                            int(t.value // 1_000_000_000),
-                            ik,
-                            None if pd.isna(et) else str(et),
-                            None if pd.isna(val) else float(val),
-                        )
-                    )
-        if not evs:
-            return
-        evs.sort(key=lambda x: (x[0], x[1]))
-        lt_s, lt_type = state.get if state.exists else (None, None)
-        out = []
-        for s, eid, et, val in evs:
+    def step(_, st, ev):
+        lt_s, lt_type = st
+        rows = []
+        for s, eid, et, cents in ev:
             if et == "purchase":
                 channel = (
                     lt_type
                     if lt_s is not None and s - lt_s <= lookback_s
                     else "direct"
                 )
-                cents = 0 if val is None else int(math.floor(val * 100.0))
-                out.append((key[0], eid, s, channel, cents))
+                rows.append((eid, s, channel, 0 if cents is None else cents))
             elif et not in (None, "refund"):
                 lt_s, lt_type = s, et
-        state.update((lt_s, lt_type))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    user_col, id_col, "epoch_s", "channel", "value_cents",
-                ],
-            )
+        return (lt_s, lt_type), rows
 
-    key_type = df.schema[user_col].dataType.simpleString()
-    df = df.filter(F.col(user_col).isNotNull())
-    return df.groupBy(user_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{user_col} {key_type}, {id_col} long, epoch_s long,"
-            " channel string, value_cents long"
-        ),
-        stateStructType="lt_s long, lt_type string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df.filter(F.col(user_col).isNotNull()), user_col, step,
+        f"{id_col} long, epoch_s long, channel string, value_cents long",
+        "lt_s long, lt_type string", (None, None),
+        fields=((ts_col, "s"), (id_col, "id"), (type_col, "raw"),
+                (value_col, "cents")),
+        order=(ts_col, id_col),
     )
 
 
@@ -1594,17 +1440,10 @@ def streaming_char_coverage(
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        sink(batch.select("lang", "c", "cnt"), batch_id)
-
-    writer = (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        counts, sink, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stateful_interval_coverage(
@@ -1637,59 +1476,34 @@ def stateful_interval_coverage(
     (or a sentinel) closes it — sum(covered_secs) over emitted islands
     plus open-island remainders equals q198's covered_secs exactly
     (asserted against the batch twin across a checkpoint restart)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key, pdfs, state: GroupState):
-        evs = []
-        for pdf in pdfs:
-            for ts, eid in zip(pdf[ts_col], pdf[id_col]):
-                t = pd.Timestamp(ts)
-                if t is not pd.NaT and not pd.isna(t):
-                    ik = -(2**63) if pd.isna(eid) else int(eid)
-                    evs.append((int(t.value // 1_000_000_000), ik))
-        if not evs:
-            return
-        evs.sort()
-        ist, ien, n = state.get if state.exists else (None, None, 0)
-        out = []
-        for s, _eid in evs:
+    def step(_, st, ev):
+        ist, ien, n = st
+        rows = []
+        for s, _ in ev:
             e = s + dur_s
             if ist is None:
                 ist, ien, n = s, e, 1
             elif s > ien:
                 # gap: the open island is proven closed — emit it
-                out.append((key[0], ist, ien, ien - ist, n))
+                rows.append((ist, ien, ien - ist, n))
                 ist, ien, n = s, e, 1
             elif e < ist:
                 # straggler wholly before the open island: its own
                 # island, already closed by the data we've seen
-                out.append((key[0], s, e, e - s, 1))
+                rows.append((s, e, e - s, 1))
             else:
                 # overlap/touch: merge (start can move backward only
                 # while the island is still open, so this stays exact)
                 ist, ien, n = min(ist, s), max(ien, e), n + 1
-        state.update((ist, ien, n))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    user_col, "island_start_s", "island_end_s",
-                    "covered_secs", "n_events",
-                ],
-            )
+        return (ist, ien, n), rows
 
-    key_type = df.schema[user_col].dataType.simpleString()
-    df = df.filter(F.col(user_col).isNotNull())
-    return df.groupBy(user_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{user_col} {key_type}, island_start_s long, island_end_s"
-            " long, covered_secs long, n_events long"
-        ),
-        stateStructType="ist long, ien long, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df.filter(F.col(user_col).isNotNull()), user_col, step,
+        "island_start_s long, island_end_s long, covered_secs long,"
+        " n_events long",
+        "ist long, ien long, n long", (None, None, 0),
+        fields=((ts_col, "s"), (id_col, "id")), order=(ts_col, id_col),
     )
 
 
@@ -1749,17 +1563,10 @@ def streaming_script_mix(
         )
     )
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        sink(batch, batch_id)
-
-    writer = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        agg, sink, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_calibration(
@@ -1811,17 +1618,10 @@ def streaming_calibration(
         F.sum("label").cast("bigint").alias("n_pos"),
     )
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        sink(batch.select("bin_id", "n", "sum_conf", "n_pos"), batch_id)
-
-    writer = (
-        bins.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        bins, sink, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_benford(
@@ -1862,17 +1662,10 @@ def streaming_benford(
         F.count(F.lit(1)).cast("bigint").alias("n_obs")
     )
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        sink(batch.select("d", "n_obs"), batch_id)
-
-    writer = (
-        hist.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        hist, sink, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_seasonality(
@@ -1919,17 +1712,10 @@ def streaming_seasonality(
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        sink(batch.select("dow", "hod", "n"), batch_id)
-
-    writer = (
-        cells.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        cells, sink, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_quantile_hist(
@@ -1976,17 +1762,10 @@ def streaming_quantile_hist(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        sink(batch.select("source", "conf_ppm", "cnt"), batch_id)
-
-    writer = (
-        hist.writeStream.outputMode("complete")
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(
+        hist, sink, checkpoint_dir, trigger_available_now,
+        output_mode="complete",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stateful_page_hinkley(
@@ -2024,32 +1803,11 @@ def stateful_page_hinkley(
     stragglers fold in arrival order (the stateful_funnel relaxation).
     NaT timestamps and NULL values are skipped, like the batch
     kernel's filter."""
-    import math
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        evs = []
-        for pdf in pdfs:
-            for ts, eid, val in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
-                t = pd.Timestamp(ts)
-                if t is not pd.NaT and not pd.isna(t) and not pd.isna(val):
-                    ik = -(2**63) if pd.isna(eid) else int(eid)
-                    cents = int(math.floor(val * 100.0))
-                    # epoch seconds (t.value is NANOseconds), floor —
-                    # matches _SECS for the non-negative post-1970
-                    # suite corpora; the batch kernel's year-1 shift
-                    # generalizes it
-                    evs.append((int(t.value // 1_000_000_000), ik, cents))
-        if not evs:
-            return
-        evs.sort(key=lambda x: (x[0], x[1]))
-        n, s, m, min_m, alarmed = (
-            state.get if state.exists else (0, 0, 0, 0, 0)
-        )
-        out = []
-        for tm, _ik, cents in evs:
+    def step(_, st, ev):
+        n, s, m, min_m, alarmed = st
+        rows = []
+        for tm, _, cents in ev:
             n += 1
             s += cents
             mu = int(math.floor(1000.0 * s / n))
@@ -2063,25 +1821,17 @@ def stateful_page_hinkley(
             ph = m - min_m
             if not alarmed and ph > lambda_milli:
                 alarmed = 1
-                out.append((key[0], tm, ph, n))
-        state.update((n, s, m, min_m, alarmed))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[key_col, "t_s", "ph_milli", "n_at_alarm"]
-            )
+                rows.append((tm, ph, n))
+        return (n, s, m, min_m, alarmed), rows
 
-    key_type = df.schema[key_col].dataType.simpleString()
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, t_s long, ph_milli long,"
-            " n_at_alarm long"
-        ),
-        stateStructType=(
-            "n long, s long, m long, min_m long, alarmed long"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, key_col, step, "t_s long, ph_milli long, n_at_alarm long",
+        "n long, s long, m long, min_m long, alarmed long", (0, 0, 0, 0, 0),
+        # epoch seconds, floor — matches _SECS for the non-negative
+        # post-1970 suite corpora; the batch kernel's year-1 shift
+        # generalizes it
+        fields=((ts_col, "s"), (id_col, "id"), (value_col, "cents")),
+        required=(value_col,), order=(ts_col, id_col),
     )
 
 
@@ -2108,9 +1858,6 @@ def stateful_rolling_distinct(
     (sketch accuracy is only provable against an exact count). NaT
     timestamps and NULL users are skipped like the batch kernel's
     filter."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     votes = (
         df.filter(F.col(ts_col).isNotNull() & F.col(user_col).isNotNull())
         .select(
@@ -2129,24 +1876,13 @@ def stateful_rolling_distinct(
         )
     )
 
-    def update(key, pdfs, state: GroupState):
-        incoming = set()
-        for pdf in pdfs:
-            incoming.update(int(u) for u in pdf["_u"])
-        (users,) = state.get if state.exists else ([],)
-        seen = set(users)
-        seen.update(incoming)
-        state.update((sorted(seen),))
-        yield pd.DataFrame(
-            {"day_epoch": [key[0]], "n_active_7d": [len(seen)]}
-        )
+    def step(_, st, ev):
+        seen = set(st[0]).union(int(u) for (u,) in ev)
+        return (sorted(seen),), [(len(seen),)]
 
-    return votes.groupBy("day_epoch").applyInPandasWithState(
-        update,
-        outputStructType="day_epoch long, n_active_7d long",
-        stateStructType="users array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        votes, "day_epoch", step, "n_active_7d long", "users array<long>",
+        ([],), fields=(("_u", "raw"),),
     )
 
 
@@ -2189,58 +1925,31 @@ def stateful_kaplan_meier(
     and non-string types are skipped like the batch kernel's filter;
     users with no signup yet hold no state and emit nothing (q258's
     WHERE t0 IS NOT NULL)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     UNSET = 2**62
 
-    def update(key, pdfs, state: GroupState):
-        sign_min = None
-        purch = []
-        for pdf in pdfs:
-            for t, et in zip(pdf[ts_col], pdf[type_col]):
-                tt = pd.Timestamp(t)
-                if tt is pd.NaT or pd.isna(tt) or not isinstance(et, str):
-                    continue
-                s = int(tt.value // 1_000_000_000)
-                if et == signup_type:
-                    sign_min = s if sign_min is None else min(sign_min, s)
-                elif et == event_type:
-                    purch.append(s)
-        t0, te = state.get if state.exists else (UNSET, UNSET)
-        if sign_min is not None and sign_min < t0:
-            t0 = sign_min
+    def step(u, st, ev):
+        t0 = min([st[0]] + [s for s, et in ev if et == signup_type])
         if t0 == UNSET:
             # no signup seen yet: nothing emittable, and storing
             # pre-signup purchases would not survive the documented
             # arrival-order relaxation anyway
-            return
-        for s in purch:
-            if t0 <= s < te:
-                te = s
-        state.update((t0, te))
-        u = int(key[0])
-        arm = (u % 2) if u >= 0 else -((-u) % 2)
-        yield pd.DataFrame(
-            {
-                user_col: [u],
-                "arm": [arm],
-                "t0": [t0],
-                "te": [None if te == UNSET else te],
-            }
+            return st, []
+        te = min(
+            [st[1]] + [s for s, et in ev if et == event_type and s >= t0]
         )
+        u = int(u)
+        arm = (u % 2) if u >= 0 else -((-u) % 2)
+        return (t0, te), [(arm, t0, None if te == UNSET else te)]
 
-    filtered = df.filter(
+    filtered = df.withColumn(user_col, F.col(user_col).cast("long")).filter(
         F.col(ts_col).isNotNull()
         & F.col(user_col).isNotNull()
         & F.col(type_col).isin(signup_type, event_type)
     )
-    return filtered.groupBy(user_col).applyInPandasWithState(
-        update,
-        outputStructType=f"{user_col} long, arm long, t0 long, te long",
-        stateStructType="t0 long, te long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        filtered, user_col, step, "arm long, t0 long, te long",
+        "t0 long, te long", (UNSET, UNSET),
+        fields=((ts_col, "s"), (type_col, "raw")),
     )
 
 
@@ -2279,61 +1988,19 @@ def stateful_groupwise_ols(
     state, so sums cannot double-count (crash-fuzz tested). NULL ts or
     value rows are skipped like the batch kernel's filter; NULL keys
     pass through as their own group, matching the batch groupBy."""
-    import math
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    def step(_, st, ev):
+        n, sx, sy, sxx, sxy, syy = st
+        for us, y in ev:
+            x = (us + 62135596800000000) // 1000000 // 3600 - 17733240
+            n, sx, sy = n + 1, sx + x, sy + y
+            sxx, sxy, syy = sxx + x * x, sxy + x * y, syy + y * y
+        moments = (n, sx, sy, sxx, sxy, syy)
+        return moments, [moments]
 
-    def update(key, pdfs, state: GroupState):
-        dn = dsx = dsy = dsxx = dsxy = dsyy = 0
-        for pdf in pdfs:
-            for ts, val in zip(pdf[ts_col], pdf[value_col]):
-                t = pd.Timestamp(ts)
-                if t is pd.NaT or pd.isna(t) or pd.isna(val):
-                    continue
-                us = t.value // 1000
-                x = (us + 62135596800000000) // 1000000 // 3600 - 17733240
-                y = int(math.floor(float(val) * 100.0))
-                dn += 1
-                dsx += x
-                dsy += y
-                dsxx += x * x
-                dsxy += x * y
-                dsyy += y * y
-        if dn == 0:
-            return
-        n, sx, sy, sxx, sxy, syy = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0)
-        )
-        n += dn
-        sx += dsx
-        sy += dsy
-        sxx += dsxx
-        sxy += dsxy
-        syy += dsyy
-        state.update((n, sx, sy, sxx, sxy, syy))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n": [n],
-                "sx": [sx],
-                "sy": [sy],
-                "sxx": [sxx],
-                "sxy": [sxy],
-                "syy": [syy],
-            }
-        )
-
-    key_type = df.schema[key_col].dataType.simpleString()
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} {key_type}, n long, sx long, sy long,"
-            " sxx long, sxy long, syy long"
-        ),
-        stateStructType=(
-            "n long, sx long, sy long, sxx long, sxy long, syy long"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    # the state is the emitted snapshot: same six columns
+    moments = "n long, sx long, sy long, sxx long, sxy long, syy long"
+    return _keyed_fold(
+        df, key_col, step, moments, moments, (0, 0, 0, 0, 0, 0),
+        fields=((ts_col, "us"), (value_col, "cents")), required=(value_col,),
     )

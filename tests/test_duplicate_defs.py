@@ -77,3 +77,21 @@ def test_no_duplicate_toplevel_definitions():
         "duplicate top-level bindings shadow the first definition "
         "silently:\n" + "\n".join(failures)
     )
+
+
+def test_registry_order_lists_name_each_query_once():
+    """The hand-kept correctness-driver order (_VERIFY_FIRST, then
+    import order, then _DRIVER_GREEN) places every query exactly once:
+    no name sits in both lists or twice in one, and all_queries()
+    yields every registry name exactly once."""
+    from klio_spark import queries as Q
+
+    names = list(Q.all_queries())
+    for lst in (Q._VERIFY_FIRST, Q._DRIVER_GREEN):
+        assert len(lst) == len(set(lst)), sorted(
+            n for n in set(lst) if lst.count(n) > 1
+        )
+    both = set(Q._VERIFY_FIRST) & set(Q._DRIVER_GREEN)
+    assert not both, sorted(both)
+    assert len(names) == len(set(names)) == len(Q._REGISTRY)
+    assert set(names) == set(Q._REGISTRY)

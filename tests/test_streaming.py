@@ -296,6 +296,61 @@ def test_stateful_retention_emits_each_week_cell_once(spark, tmp_path):
     assert cells == [(1, 0, 0), (1, 0, 2), (1, 0, 3), (2, 1, 0)]
 
 
+def test_stateful_retention_skips_null_timestamps(spark, tmp_path):
+    """A NULL ts row is skipped like in every other stateful op; it
+    must not kill the query (its date has no ordinal)."""
+    import datetime as dt
+
+    edir = tmp_path / "retnull"
+    spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1)), (1, None), (2, None)],
+        "user_id long, ts timestamp",
+    ).write.parquet(str(edir / "p"))
+    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(
+        str(edir / "p")
+    )
+    q = st.foreach_batch_sink(
+        st.stateful_retention(stream),
+        lambda b, bid: b.write.mode("append").parquet(f"{tmp_path}/rnout"),
+        str(tmp_path / "ckpt-rn"),
+    )
+    q.awaitTermination(60)
+    assert q.exception() is None
+    rows = spark.read.parquet(f"{tmp_path}/rnout").collect()
+    assert [(r.user_id, r.cohort_week, r.week_offset) for r in rows] == [
+        (1, 0, 0)
+    ]
+
+
+def test_stateful_keep_latest_keeps_null_value(spark, tmp_path):
+    """A NULL latest value emits as NULL, like q113's rn=1 row — never
+    the text 'nan' (numeric column) or 'None'; non-NULL values keep
+    their text form."""
+    import datetime as dt
+
+    edir = tmp_path / "klnull"
+    t = lambda m: dt.datetime(2024, 1, 1, 0, m)  # noqa: E731
+    spark.createDataFrame(
+        [("k1", t(1), None), ("k2", t(1), None), ("k2", t(2), 1.5)],
+        "element string, ts timestamp, value double",
+    ).write.parquet(str(edir / "p"))
+    stream = spark.readStream.schema(
+        "element string, ts timestamp, value double"
+    ).parquet(str(edir / "p"))
+    q = st.foreach_batch_sink(
+        st.stateful_keep_latest(stream),
+        lambda b, bid: b.write.mode("append").parquet(f"{tmp_path}/knout"),
+        str(tmp_path / "ckpt-kn"),
+    )
+    q.awaitTermination(60)
+    rows = spark.read.parquet(f"{tmp_path}/knout").collect()
+    got = {r.element: (r.latest_ts_micros, r.latest_value) for r in rows}
+    assert got == {
+        "k1": (int(t(1).timestamp() * 1e6), None),
+        "k2": (int(t(2).timestamp() * 1e6), "1.5"),
+    }
+
+
 def test_stateful_funnel_string_keys(spark, tmp_path):
     """The key column keeps its own type: a string-keyed stream funnels
     without a long cast (output schema derives from the input schema)."""
