@@ -43,33 +43,6 @@ _CONTROLS = {
 }
 
 
-def _sweep_orphan_tables(spark) -> None:
-    """Remove q129/q144 bucketed-table dirs left by DEAD sessions
-    (VERDICT r10 item 10). The dirs are applicationId-suffixed
-    (plans/partitioning.session_table_name), so a dead session's
-    orphans accumulate one generation per bench/driver run. Sweeping
-    here — at bench start, sparing only the CURRENT session's suffix —
-    keeps the warehouse at <=1 generation. bench.py is the only
-    long-lived multi-query context that writes these; concurrent
-    test runs use their own tmp warehouses."""
-    import hashlib
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-    if wh.scheme not in ("", "file") or not os.path.isdir(wh.path):
-        return
-    mine = hashlib.md5(
-        spark.sparkContext.applicationId.encode()
-    ).hexdigest()[:8]
-    for d in os.listdir(wh.path):
-        if (
-            d.startswith(("q129_mh_buckets_", "q144_inv_index_"))
-            and not d.endswith(f"_{mine}")
-        ):
-            shutil.rmtree(os.path.join(wh.path, d), ignore_errors=True)
-
-
 def _executor_task_ms(spark) -> int | None:
     """Cumulative executor task run time (ms) from the driver's
     Dropwizard metrics servlet (`driver.executor.runTime`) — a tiny
@@ -116,7 +89,6 @@ def main() -> int:
 
     spark = get_spark("klio-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    _sweep_orphan_tables(spark)
     # warm up: one-time session costs land here instead of inside the
     # first queries' timings — JVM + codegen, parquet footer reads, the
     # Python/Arrow UDF worker pool, and the broadcast-exchange machinery

@@ -39,26 +39,39 @@ def salted_join(
     return out.drop("_salt")
 
 
+def _local_dir(spark, db: str) -> str | None:
+    """Database ``db``'s directory on a file-scheme warehouse; None on
+    object stores, which leave no local directories behind."""
+    from urllib.parse import unquote, urlparse
+
+    uri = urlparse(spark.catalog.getDatabase(db).locationUri)
+    return unquote(uri.path) if uri.scheme in ("", "file") else None
+
+
 def session_table_name(spark, base: str) -> str:
-    """Session-scoped catalog table name: ``base_<8-hex>`` keyed on the
-    Spark applicationId.
+    """Session-scoped catalog table name ``klio_<8-hex>.<base>``: the
+    table lives in a per-session database keyed on the Spark
+    applicationId, at ``<spark.sql.warehouse.dir>/klio_<8-hex>.db``.
 
     A fixed global name lets two sessions sharing a warehouse (parallel
     test runs, concurrent drivers) DROP + rmtree each other's index
-    mid-query; the applicationId suffix — unique per SparkSession
-    lifecycle, constant across calls — isolates them. Note the current
-    callers still rebuild on every call (overwrite_bucketed_table drops
-    first); the stable name makes within-session reads/plans
-    deterministic and keeps a session's own re-runs self-reclaiming.
-    Trade-off accepted: dead sessions leave their suffixed dirs behind
-    (a shared warehouse needs an external sweep, e.g. `job delete` or a
-    TTL policy) — an orphan sweep here cannot distinguish a dead
-    session's table from a LIVE concurrent one, which is the exact
-    corruption this function exists to prevent."""
+    mid-query; the per-session database isolates them, and a session's
+    own re-runs overwrite its table in place. On a file-scheme
+    warehouse the database directory is removed when the process
+    exits, so no session ever sweeps another's tables. A killed process
+    skips that step; its directory is the only thing left behind."""
+    import atexit
     import hashlib
+    import shutil
 
     app = spark.sparkContext.applicationId
-    return f"{base}_{hashlib.md5(app.encode()).hexdigest()[:8]}"
+    db = f"klio_{hashlib.md5(app.encode()).hexdigest()[:8]}"
+    if not spark.catalog.databaseExists(db):
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+        path = _local_dir(spark, db)
+        if path is not None:
+            atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return f"{db}.{base}"
 
 
 def write_bucketed(
@@ -89,24 +102,16 @@ def overwrite_bucketed_table(
     stores don't leave local orphans."""
     import os
     import shutil
-    from urllib.parse import urlparse
 
     spark = df.sparkSession
-    quoted = ".".join(f"`{p}`" for p in table.split("."))
-    spark.sql(f"DROP TABLE IF EXISTS {quoted}")
     parts = table.split(".")
+    quoted = ".".join(f"`{p}`" for p in parts)
+    spark.sql(f"DROP TABLE IF EXISTS {quoted}")
     if len(parts) <= 2:
-        wh = urlparse(
-            spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        )
-        if wh.scheme in ("", "file"):
-            db = (
-                parts[0] if len(parts) == 2
-                else spark.catalog.currentDatabase()
-            ).lower()
-            tbl = parts[-1].lower()
-            rel = tbl if db == "default" else os.path.join(f"{db}.db", tbl)
-            shutil.rmtree(os.path.join(wh.path, rel), ignore_errors=True)
+        db = parts[0] if len(parts) == 2 else spark.catalog.currentDatabase()
+        path = _local_dir(spark, db)
+        if path is not None:
+            shutil.rmtree(os.path.join(path, parts[-1].lower()), ignore_errors=True)
     write_bucketed(df, table, key, buckets)
     return spark.table(quoted)
 

@@ -287,8 +287,8 @@ def q129_minhash_bucket_table(spark: SparkSession, sf_dir: str):
         num_hashes=64,
         bands=16,
         threshold=0.3,
-        # session-scoped name in spark-warehouse/ (job dir): concurrent
-        # sessions must not DROP each other's bucket table mid-query
+        # session-scoped table (its own database under spark-warehouse/):
+        # concurrent sessions must not DROP each other's bucket table
         bucket_table=session_table_name(spark, "q129_mh_buckets"),
         n_buckets=8,
     ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))

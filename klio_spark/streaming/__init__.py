@@ -346,12 +346,14 @@ def stateful_funnel(
     streaming relaxation)."""
     stage_list = list(stages)
 
-    # same-time ties cannot matter: only one event per instant advances
+    # same-time ties cannot matter: only one event per instant advances;
+    # a user at stage 0 has no time yet (t is unset, whatever the epoch)
     def step(_, st, ev):
         stage, t = st
         rows = []
         for tm, et in ev:
-            if stage < len(stage_list) and et == stage_list[stage] and tm > t:
+            if (stage < len(stage_list) and et == stage_list[stage]
+                    and (stage == 0 or tm > t)):
                 stage, t = stage + 1, tm
                 rows.append((stage, et, tm))
         return (stage, t), rows
@@ -392,14 +394,14 @@ def stateful_keep_latest(
         t, v = st
         changed = False
         for tm, val in ev:  # arrival order: the first of equal times wins
-            if tm > t:
+            if t is None or tm > t:
                 # a NULL value stays NULL (q113's rn=1 row keeps it)
                 t, v, changed = tm, None if val is None else str(val), True
         return (t, v), [(t, v)] if changed else []
 
     return _keyed_fold(
         df, key_col, step, "latest_ts_micros long, latest_value string",
-        "t long, v string", (-1, None),
+        "t long, v string", (None, None),
         fields=((ts_col, "us"), (value_col, "raw")),
         timeout=None if idle_timeout_ms is None else (
             GroupStateTimeout.ProcessingTimeTimeout, lambda st: idle_timeout_ms

@@ -79,19 +79,43 @@ def test_no_duplicate_toplevel_definitions():
     )
 
 
-def test_registry_order_lists_name_each_query_once():
-    """The hand-kept correctness-driver order (_VERIFY_FIRST, then
-    import order, then _DRIVER_GREEN) places every query exactly once:
-    no name sits in both lists or twice in one, and all_queries()
-    yields every registry name exactly once."""
+def test_registry_order_is_derived_from_correctness_records(monkeypatch):
+    """all_queries() yields every registry name once, in the order its
+    docstring states: _TOUCHED first, then the queries with no green
+    record (or a non-green newest one), then the rest by the round of
+    their last green CORRECTNESS_r*.json record, oldest first. With no
+    records the same rule gives import order."""
+    import glob
+    import json
+    import re
+
     from klio_spark import queries as Q
 
     names = list(Q.all_queries())
-    for lst in (Q._VERIFY_FIRST, Q._DRIVER_GREEN):
-        assert len(lst) == len(set(lst)), sorted(
-            n for n in set(lst) if lst.count(n) > 1
-        )
-    both = set(Q._VERIFY_FIRST) & set(Q._DRIVER_GREEN)
-    assert not both, sorted(both)
     assert len(names) == len(set(names)) == len(Q._REGISTRY)
     assert set(names) == set(Q._REGISTRY)
+
+    green = {}
+    paths = glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
+    assert paths
+    for path in sorted(paths, key=lambda p: int(re.findall(r"\d+", p)[-1])):
+        rnd = int(re.findall(r"\d+", path)[-1])
+        with open(path) as f:
+            for name, rec in json.load(f).items():
+                if rec["hash_match"] is True:
+                    green[name] = rnd
+                else:
+                    green.pop(name, None)
+
+    touched = {n for n, rnd in Q._TOUCHED.items() if green.get(n, rnd + 1) <= rnd}
+    assert touched and set(names[: len(touched)]) == touched
+    rest = names[len(touched):]
+    stale = [n for n in rest if n not in green]
+    assert rest[: len(stale)] == stale
+    for group in (names[: len(touched)], rest[len(stale):]):
+        rounds = [green[n] for n in group]
+        assert rounds == sorted(rounds), "last-green rounds must not decrease"
+    assert green[rest[len(stale)]] < max(green.values()), "the stalest leads"
+
+    monkeypatch.setattr(Q, "_green_rounds", dict)
+    assert list(Q.all_queries()) == list(Q._REGISTRY)

@@ -1,9 +1,10 @@
 """Driver-contract sanity: __spark_entry__ exposes entry/queries/oracle_sql
 in exactly the shape the verification driver consumes."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 

@@ -2,6 +2,7 @@
 integration suite pattern (copy job dir → generate inputs → `job run` →
 assert outputs)."""
 
+import os
 import shutil
 
 import numpy as np
@@ -11,7 +12,9 @@ from pyspark.sql import functions as F
 from klio_spark import cli
 from klio_spark.audio import dsp
 
-EXAMPLES = "/root/repo/examples"
+EXAMPLES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples"
+)
 
 
 def _stage(tmp_path, name):

@@ -168,3 +168,64 @@ def test_cents_outside_int64_raise(v):
     fold = _recording_fold([], fields=(("v", "cents"),))
     with pytest.raises(OverflowError):
         _run(fold, [pd.DataFrame({"v": [1.5, v]})], FakeState())
+
+
+def _op_fold(monkeypatch, op, **kw):
+    """The fold `op` hands to _keyed_fold, built without a Spark frame."""
+    from klio_spark import streaming
+
+    def capture(df, key_col, step, out, state, init, **spec):
+        names = [key_col] + [c.split()[0] for c in out.split(",")]
+        return _group_fold(step, names, init, **spec)
+
+    monkeypatch.setattr(streaming, "_keyed_fold", capture)
+    return op(None, **kw)
+
+
+_MOON = pd.Timestamp("1969-07-20 20:17:40")
+_MOON_US = _MOON.value // 1_000
+
+
+def test_funnel_step_advances_on_pre_1970_events(monkeypatch):
+    """A stage-0 user has no time yet: a 1969 signup (negative epoch
+    micros) advances it, and the next stage still needs a later time."""
+    from klio_spark.streaming import stateful_funnel
+
+    fold = _op_fold(monkeypatch, stateful_funnel)
+    state = FakeState()
+    pdf = pd.DataFrame({
+        "ts": [_MOON, _MOON, _MOON + pd.Timedelta(seconds=1)],
+        "event_type": ["signup", "view", "view"],
+    })
+    rows = _run(fold, [pdf], state, key=1)
+    assert rows.to_dict("list") == {
+        "user_id": [1, 1],
+        "stage": [1, 2],
+        "stage_name": ["signup", "view"],
+        "ts_micros": [_MOON_US, _MOON_US + 1_000_000],
+    }
+    assert state.get == (2, _MOON_US + 1_000_000)
+
+
+def test_keep_latest_step_emits_pre_1970_key(monkeypatch):
+    """A key whose only event is from 1969 emits it and holds it."""
+    from klio_spark.streaming import stateful_keep_latest
+
+    fold = _op_fold(monkeypatch, stateful_keep_latest, idle_timeout_ms=5)
+    state = FakeState()
+    pdf = pd.DataFrame({"ts": [_MOON], "value": ["eagle"]})
+    rows = _run(fold, [pdf], state, key="k")
+    assert rows.to_dict("list") == {
+        "element": ["k"],
+        "latest_ts_micros": [_MOON_US],
+        "latest_value": ["eagle"],
+    }
+    assert state.get == (_MOON_US, "eagle")
+    assert state.timeouts == [("duration", 5)]
+    # an older 1969 row is absorbed; the tombstone stays -1
+    older = pd.DataFrame({"ts": [_MOON - pd.Timedelta(days=1)], "value": ["x"]})
+    assert _run(fold, [older], state, key="k") is None
+    expired = FakeState(held=state.get, timed_out=True)
+    assert _run(fold, [], expired, key="k").to_dict("list") == {
+        "element": ["k"], "latest_ts_micros": [-1], "latest_value": [None],
+    }

@@ -49,3 +49,36 @@ def test_bucketed_join_has_no_exchange(spark):
     finally:
         spark.sql("DROP TABLE IF EXISTS bk_a")
         spark.sql("DROP TABLE IF EXISTS bk_b")
+
+
+def test_bench_keeps_foreign_tables_and_leaves_none_of_its_own(tmp_path, sf_dir):
+    """bench.py builds q144's bucketed index in a per-session database
+    under the warehouse: another session's table dir survives the run,
+    and the bench session's own database is gone once its process
+    exits. bench.py runs from a copy so its BENCH_LOCAL.json lands in
+    the temp dir."""
+    import json
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    foreign = tmp_path / "spark-warehouse" / "q144_inv_index_deadbeef"
+    foreign.mkdir(parents=True)
+    (foreign / "part-00000.parquet").write_bytes(b"live")
+    shutil.copy(os.path.join(repo, "bench.py"), tmp_path)
+    env = dict(
+        os.environ, PYTHONPATH=repo, SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_BENCH_REPS="1", SPARK_GRAFT_CPUS="2",
+        SPARK_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "bench.py", "q144_inverted_index_topk"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    with open(tmp_path / "BENCH_LOCAL.json") as f:
+        assert json.load(f)["queries"]["q144_inverted_index_topk"] > 0
+    assert (foreign / "part-00000.parquet").read_bytes() == b"live"
+    assert os.listdir(tmp_path / "spark-warehouse") == [foreign.name]

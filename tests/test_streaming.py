@@ -351,6 +351,46 @@ def test_stateful_keep_latest_keeps_null_value(spark, tmp_path):
     }
 
 
+def test_stateful_keep_latest_matches_batch_twin_before_1970(spark, tmp_path):
+    """Keys whose events predate 1970 (negative epoch micros, down to
+    -1 us) emit like any other: the final value per key equals q113's
+    rn=1 row over the same rows."""
+    import datetime as dt
+
+    from klio_spark.queries.behavior import keep_latest
+
+    moon = dt.datetime(1969, 7, 20, 20, 17, 40)
+    rows = [
+        (1, "view", 10, moon, 1.0),
+        (1, "view", 11, moon + dt.timedelta(days=1), 2.0),
+        (2, "view", 20, dt.datetime(1950, 1, 1), 3.0),
+        (3, "view", 30, dt.datetime(1969, 12, 31, 23, 59, 59, 999999), 4.0),
+        (3, "view", 31, dt.datetime(1960, 1, 1), 5.0),
+        (4, "view", 40, moon, 6.0),
+        (4, "view", 41, dt.datetime(2024, 1, 1), 7.0),
+    ]
+    schema = "user_id long, event_type string, event_id long, ts timestamp, value double"
+    edir = tmp_path / "kl1969"
+    spark.createDataFrame(rows, schema).write.parquet(str(edir / "p"))
+    batch = keep_latest(spark.read.parquet(str(edir / "p")))
+    want = {r.user_id: r.latest_event_id for r in batch.collect()}
+
+    stream = spark.readStream.schema(schema).parquet(str(edir / "p"))
+    q = st.foreach_batch_sink(
+        st.stateful_keep_latest(stream, key_col="user_id", value_col="event_id"),
+        lambda b, bid: b.write.mode("append").parquet(f"{tmp_path}/k69out"),
+        str(tmp_path / "ckpt-k69"),
+    )
+    q.awaitTermination(60)
+    latest = {}
+    for r in spark.read.parquet(f"{tmp_path}/k69out").collect():
+        if r.user_id not in latest or r.latest_ts_micros > latest[r.user_id][0]:
+            latest[r.user_id] = (r.latest_ts_micros, int(r.latest_value))
+    assert {k: v for k, (_, v) in latest.items()} == want == {
+        1: 11, 2: 20, 3: 30, 4: 41
+    }
+
+
 def test_stateful_funnel_string_keys(spark, tmp_path):
     """The key column keeps its own type: a string-keyed stream funnels
     without a long cast (output schema derives from the input schema)."""

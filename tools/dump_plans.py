@@ -1,59 +1,45 @@
 #!/usr/bin/env python
-"""Dump the physical-plan operator tree of every declared query to
-PLANS.md — reviewable evidence of pushdown/broadcast/shuffle choices
-without running anything."""
+"""Dump .explain('formatted') for declared queries to <out_dir>/<q>_<tag>.txt.
+
+Plan evidence for a plan-shape change: run once from a checkout of the
+pre-change commit with tag=before and once from the live tree with
+tag=after, then diff. With no query names, every declared query is
+dumped. The data dir is $SPARK_GRAFT_SF_DIR, with bench.py's default.
+
+Usage: python tools/dump_plans.py <out_dir> <tag> [query ...]
+"""
 
 from __future__ import annotations
 
-import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from klio_spark import plans
-    from klio_spark.queries import all_queries
+    from klio_spark.queries import all_queries, release_scoped_caches
     from klio_spark.session import get_spark
 
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
-
-    out = [
-        "# PLANS — physical operator trees for every declared query",
-        "",
-        f"Generated by tools/dump_plans.py at {sf_dir} (AQE on: trees show",
-        "the initial plan; AQE may further coalesce/convert at runtime).",
-        "Summary line: #shuffles (hash/range exchanges, broadcast excluded),",
-        "#broadcast joins, pushed filters.",
-        "",
-    ]
-    for name, spec in sorted(all_queries().items()):
-        try:
-            df = spec.fn(spark, sf_dir)
-            full = plans.plan_str(df)
-            tree = full.split("\n\n")[0]  # operator tree only
-            nsh = plans.num_shuffles(df)
-            nbc = plans.broadcast_join_count(df)
-            pf = plans.pushed_filters(df)
-            out.append(f"## {name}")
-            if spec.doc:
-                out.append(f"*{spec.doc}*")
-            out.append(
-                f"\n`shuffles={nsh} broadcast_joins={nbc} "
-                f"pushed_filters={len(pf)}`\n"
-            )
-            out.append("```")
-            out.append(tree.replace("== Physical Plan ==\n", "").rstrip())
-            out.append("```")
-            out.append("")
-        except Exception as e:  # pragma: no cover
-            out.append(f"## {name}\nERROR: {e}\n")
-    with open("/root/repo/PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(out)} lines)")
+    os.makedirs(out_dir, exist_ok=True)
+    specs = all_queries()
+    for name in sys.argv[3:] or sorted(specs):
+        df = specs[name].fn(spark, sf_dir)
+        txt = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(f"# {name} [{tag}] explain('formatted') at {sf_dir}\n")
+            f.write(txt)
+        release_scoped_caches()
+        spark.catalog.clearCache()
+        print(f"wrote {path}")
     return 0
 
 
