@@ -5,7 +5,13 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is forced with a noop write (full computation, no driver
-collect cost). A -1 value means the query errored.
+collect cost). A -1 value means the query errored. The full record goes
+to BENCH_LOCAL.json in the working directory (a run naming queries
+refreshes only their entries). Its "layers" map holds, per query, the
+min-wall rep's build_s (spec.fn) and exec_s (the write), which add up
+to its wall time (to rounding), and that rep's own jobs, stages, tasks,
+task_run_s (= core_sec), task_cpu_s, shuffle_read_bytes,
+shuffle_write_bytes and spill_bytes.
 """
 
 from __future__ import annotations
@@ -43,46 +49,81 @@ _CONTROLS = {
 }
 
 
-def _executor_task_ms(spark) -> int | None:
-    """Cumulative executor task run time (ms) from the driver's
-    Dropwizard metrics servlet (`driver.executor.runTime`) — a tiny
-    constant-size payload. Per-query deltas give `core_sec`: executor
-    core-time alongside wall (VERDICT r10 item 8 — wall at sf0.1 can
-    invert the 100 TB-correct decision; core-time is the cluster
-    bill). NOT the REST executor summary's `totalDuration`: in local
-    mode that field tracks executor UPTIME (measured: +3.1 s across a
-    3 s idle sleep), while this counter is 0 across idle and sums task
-    time exactly (measured: 0.72 s wall / 8.14 s task-time on a
-    32-way job). Read OUTSIDE the timed region; never raises."""
+def _rep_layers(spark, group: str) -> dict | None:
+    """Job, stage and task totals of one rep: the jobs of job group
+    `group` (status tracker) and their stages (the driver's REST API,
+    one small request per stage), read after the rep, outside the timed
+    region. Only the rep's own stages are fetched, so the read does not
+    grow with the run. A stage counts once, however many of the rep's
+    jobs list it, and only the attempts that ran (COMPLETE or FAILED).
+    `task_run_s` sums their executorRunTime: the executor core time of
+    the rep, reported as `core_sec` (the 100 TB cluster bill, immune to
+    the wall clock's idle-core subsidies). None when a read fails."""
+    import urllib.error
     import urllib.request
 
     try:
-        base = spark.sparkContext.uiWebUrl
-        with urllib.request.urlopen(f"{base}/metrics/json", timeout=5) as r:
-            counters = json.loads(r.read()).get("counters", {})
-        for k, v in counters.items():
-            if k.endswith(".driver.executor.runTime"):
-                return v.get("count")
-        return None
-    except Exception:
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        stage_ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
+        ran = []
+        for sid in sorted(stage_ids):
+            url = f"{base}/{sid}?details=false"
+            try:
+                with urllib.request.urlopen(url, timeout=5) as r:
+                    ran += [a for a in json.loads(r.read())
+                            if a["status"] in ("COMPLETE", "FAILED")]
+            except urllib.error.HTTPError as e:
+                # at spark.ui.retainedStages the status store evicts
+                # SKIPPED stages first: a stage it no longer holds
+                # did not run
+                if e.code != 404:
+                    raise
+    except Exception as e:
+        print(f"# LAYERS {group} unread: {e!r}", file=sys.stderr)
         return None
 
+    def total(field: str) -> int:
+        return sum(a.get(field) or 0 for a in ran)
 
-def _record_core_sec(
-    core_sec: dict[str, float], name: str, c0: int | None, c1: int | None
+    return {
+        "jobs": len(jobs),
+        "stages": len(ran),
+        "tasks": total("numCompleteTasks"),
+        "task_run_s": round(total("executorRunTime") / 1e3, 3),
+        "task_cpu_s": round(total("executorCpuTime") / 1e9, 3),
+        "shuffle_read_bytes": total("shuffleReadBytes"),
+        "shuffle_write_bytes": total("shuffleWriteBytes"),
+        "spill_bytes": total("diskBytesSpilled"),
+    }
+
+
+def _record_layers(
+    core_sec: dict[str, float], layers: dict[str, dict], name: str,
+    build_s: float, exec_s: float, rep: dict | None,
 ) -> None:
-    """Set `name`'s core_sec to the new best rep's counter delta. When
-    either read failed, drop the entry: an earlier rep's value would no
-    longer match the wall time reported beside it."""
-    if c0 is None or c1 is None:
+    """Keep the new best rep's layer record, and its task run time as
+    `core_sec`. When that rep's read failed, drop both: an earlier
+    rep's record would no longer match the wall time reported beside
+    it."""
+    if rep is None:
         core_sec.pop(name, None)
+        layers.pop(name, None)
     else:
-        core_sec[name] = round((c1 - c0) / 1000.0, 3)
+        layers[name] = {"build_s": build_s, "exec_s": exec_s, **rep}
+        core_sec[name] = rep["task_run_s"]
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    # Python workers import klio_spark too, whatever the working directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [os.path.dirname(os.path.abspath(__file__))]
+        + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    )
 
     from klio_spark.queries import all_queries
     from klio_spark.session import get_spark
@@ -111,12 +152,13 @@ def main() -> int:
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     timings: dict[str, float] = {}
     core_sec: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     run_set = (only | set(_CONTROLS)) if only else only
     for name, spec in sorted(specs.items()):
         if run_set and name not in run_set:
             continue
         best = None
-        for _ in range(reps):
+        for rep in range(reps):
             if name in _CONTROLS:
                 # the frozen host-drift meters must run under the SAME
                 # engine conditions as their round-5 reference times,
@@ -130,19 +172,25 @@ def main() -> int:
                 from klio_spark.queries import _SCHEMA_MEMO
 
                 _SCHEMA_MEMO.clear()
-            c0 = _executor_task_ms(spark)
+            # tag the rep's jobs so its layers can be read back alone
+            group = f"bench-{name}-{rep}"
+            spark.sparkContext.setJobGroup(group, group)
             t0 = time.perf_counter()
             try:
                 df = spec.fn(spark, sf_dir)
+                t1 = time.perf_counter()
                 df.write.mode("overwrite").format("noop").save()
-                dt = round(time.perf_counter() - t0, 3)
+                t2 = time.perf_counter()
+                dt = round(t2 - t0, 3)
                 if best is None or 0 < dt < best:
                     best = dt
-                    # core_sec of the rep that produced the reported
-                    # wall time (a matched wall/core pair, additive
-                    # field only — the timed region is unchanged; the
-                    # REST reads sit outside the t0..dt bracket)
-                    _record_core_sec(core_sec, name, c0, _executor_task_ms(spark))
+                    # layers of the rep that produced the reported wall
+                    # time (a matched record); the reads sit outside the
+                    # t0..t2 bracket
+                    _record_layers(
+                        core_sec, layers, name, round(t1 - t0, 3),
+                        round(t2 - t1, 3), _rep_layers(spark, group),
+                    )
             except Exception as e:
                 print(f"# ERROR {name}: {e}", file=sys.stderr)
                 best = best if best is not None and best > 0 else -1.0
@@ -184,6 +232,10 @@ def main() -> int:
         "core_sec_total": round(
             sum(v for v in core_sec.values() if v > 0), 3
         ),
+        # per query, the min-wall rep's layers: plan building (spec.fn)
+        # vs execution (the noop write) wall time, and its own Spark
+        # jobs, stages and tasks (_rep_layers)
+        "layers": layers,
         "reps": reps,
         "agg": "min",
         "sf": sf_val,
@@ -198,9 +250,7 @@ def main() -> int:
     # full-map line got head-truncated and parsed as null. Persist the full
     # per-query map to a file, and print a compact summary line LAST —
     # total + top-10 slowest — guaranteed under the capture window.
-    local = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
-    )
+    local = "BENCH_LOCAL.json"  # in the working directory
     if only and os.path.exists(local):
         # subset run: refresh only the measured entries — don't clobber
         # the last full map (the round ledger compares against it)
@@ -211,7 +261,12 @@ def main() -> int:
             merged["value"] = round(
                 sum(t for t in merged["queries"].values() if t > 0), 3
             )
-            merged.setdefault("core_sec", {}).update(core_sec)
+            for key, fresh in (("core_sec", core_sec), ("layers", layers)):
+                # a measured query whose read failed drops its old entry
+                kept = merged.setdefault(key, {})
+                for q in timings:
+                    kept.pop(q, None)
+                kept.update(fresh)
             merged["core_sec_total"] = round(
                 sum(v for v in merged["core_sec"].values() if v > 0), 3
             )
@@ -248,7 +303,7 @@ def main() -> int:
     print(
         json.dumps(
             {
-                **full,
+                **{k: v for k, v in full.items() if k != "layers"},
                 "queries": top10,
                 # truncate to the same top-10 keys: the full 255-entry
                 # map lives in BENCH_LOCAL.json; the printed line must

@@ -17,8 +17,8 @@ drop-don't-fail error routing as a core API.
 Layout:
     envelope    - KlioMessage as a column schema (ref: core/src/klio_core/proto/klio.proto)
     config      - klio-job.yaml-shaped job config  (ref: core/src/klio_core/config/core.py)
-    context     - KlioContext: config/logger/metrics in UDFs (ref: lib/src/klio/transforms/core.py)
-    operators   - ping/force/recipients/existence/audit/counters + prologue
+    context     - KlioContext: config/logger in UDFs (ref: lib/src/klio/transforms/core.py)
+    operators   - ping/force/recipients/existence/audit/counters (observe()) + prologue
                   (ref: lib/src/klio/transforms/helpers.py, exec/src/klio_exec/commands/run.py)
     sources     - event readers (text/avro/parquet/bq-style/stream)
                   (ref: lib/src/klio/transforms/io.py)

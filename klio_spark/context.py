@@ -1,16 +1,16 @@
-"""KlioContext: config + logger + metrics available inside driver code and
+"""KlioContext: config + logger available inside driver code and
 executor-side UDFs.
 
 Mirrors lib/src/klio/transforms/core.py:29-164 (KlioContext built from the
-main-session RunConfig, with lazy logger/metrics). On Spark the config rides
+main-session RunConfig, with a lazy logger). On Spark the config rides
 to executors by closure capture (it's a small dataclass — cheaper and more
-robust than a broadcast for <1 MB configs); metrics are DataFrame
-``observe()`` counters plus a process-local registry for UDF internals.
+robust than a broadcast for <1 MB configs). Metrics are not kept here:
+counts ride DataFrame ``observe()`` (operators/counters.count_messages)
+and are read from the returned Observation after the action.
 """
 
 from __future__ import annotations
 
-import collections
 import logging
 import threading
 
@@ -20,25 +20,6 @@ _LOCK = threading.Lock()
 _CURRENT: "KlioContext | None" = None
 
 
-class _Metrics:
-    """Process-local named counters (one instance per executor python worker).
-
-    The reference dispatches to pluggable relays (lib/src/klio/metrics/
-    client.py:44-206). Engine-level counts use df.observe(); this registry
-    covers UDF-internal counters (retries, drops, timeouts) which are
-    surfaced per-partition in logs and aggregated by tests.
-    """
-
-    def __init__(self) -> None:
-        self.counters: collections.Counter[str] = collections.Counter()
-
-    def incr(self, name: str, n: int = 1) -> None:
-        self.counters[name] += n
-
-    def get(self, name: str) -> int:
-        return self.counters[name]
-
-
 class KlioContext:
     """Singleton-ish context: `KlioContext.current()` anywhere, including
     inside pandas_udf bodies (re-created lazily on executors)."""
@@ -46,7 +27,6 @@ class KlioContext:
     def __init__(self, config: KlioJobConfig | None = None) -> None:
         self.config = config or KlioJobConfig()
         self.logger = logging.getLogger(f"klio_spark.{self.config.job_name}")
-        self.metrics = _Metrics()
 
     @property
     def job(self) -> tuple[str, str]:

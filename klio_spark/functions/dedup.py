@@ -87,11 +87,6 @@ def shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-def _base_hashes(shingle_col: Column) -> Column:
-    """One xxhash64 per shingle (JVM-side) — the only string hashing pass."""
-    return F.transform(shingle_col, lambda s: F.xxhash64(s))
-
-
 def shingle_hashes(text_col: Column, n: int = 3) -> Column:
     """Fused tokenize→shingle→hash in ONE Arrow-batched UDF → ARRAY<LONG>
     of distinct shingle hashes (blake2b/8, deterministic everywhere).
@@ -196,18 +191,6 @@ def _signature_from_hash_col(hash_col: Column, num_hashes: int) -> Column:
 
     _sig.__annotations__ = {"h": pd.Series, "return": pd.Series}
     return pandas_udf(_sig, "array<long>")(hash_col)
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature (Broder '97): min over shingles of h_i(s).
-
-    Hash family = one JVM xxhash64 per shingle string, then `num_hashes`
-    multiply-shift permutations applied in ONE vectorized numpy outer
-    product per Arrow batch. (The all-expression alternative — num_hashes
-    array_min/transform trees — evaluates interpreted: ~30M lambda calls
-    per 5k docs.) Array of BIGINT.
-    """
-    return _signature_from_hash_col(_base_hashes(shingle_col), num_hashes)
 
 
 def band_hashes(sig_col: Column, bands: int, rows: int) -> Column:

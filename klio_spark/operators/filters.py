@@ -122,6 +122,7 @@ def drop(df: DataFrame) -> DataFrame:
     """Terminate a branch (KlioDrop, helpers.py:264-284).
 
     Returns an empty-but-schema'd DataFrame; callers normally just don't
-    write the branch — counts come from count_messages on the input.
+    write the branch — counts come from the Observation that
+    count_messages returns for the input.
     """
     return df.filter(F.lit(False))

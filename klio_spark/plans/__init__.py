@@ -51,10 +51,6 @@ def sort_merge_join_count(df: DataFrame) -> int:
     return len(re.findall(r"SortMergeJoin", plan_str(df)))
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan_str(df))))
-
-
 def assert_filter_pushed(df: DataFrame, fragment: str) -> None:
     pf = pushed_filters(df)
     assert any(fragment in f for f in pf), (

@@ -116,20 +116,6 @@ def overwrite_bucketed_table(
     return spark.table(quoted)
 
 
-def repartition_for_udf(df: DataFrame, n: int | None = None, *cols: str) -> DataFrame:
-    """Explicit repartition in front of a heavy UDF stage.
-
-    Arrow UDF stages inherit upstream partitioning; after a selective
-    filter that can mean 3 fat partitions on 1000 executors. Spreading by
-    key (or round-robin when no key) right before the expensive stage is
-    the klio thread-limiter's moral equivalent (SURVEY §4)."""
-    if cols:
-        return df.repartition(n, *[F.col(c) for c in cols]) if n else df.repartition(
-            *[F.col(c) for c in cols]
-        )
-    return df.repartition(n) if n else df
-
-
 def fan_out_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Parallelize an effectively-unsplittable scan before heavy
     per-row work (the input-skew remedy: "one huge unsplittable file …

@@ -184,10 +184,6 @@ _WRITERS: dict[str, Callable[[DataFrame, EventIOConfig], None]] = {
 }
 
 
-def register_writer(type_name: str, fn) -> None:
-    _WRITERS[type_name] = fn
-
-
 def write_event_output(df: DataFrame, cfg: EventIOConfig) -> None:
     """Dispatch on type/format (KlioWriteToEventOutput, helpers.py:214-260)."""
     if cfg.skip_klio_write:

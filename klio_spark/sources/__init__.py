@@ -36,10 +36,6 @@ _READERS: dict[str, Callable[..., DataFrame]] = {
 }
 
 
-def register_reader(type_name: str, fn: Callable[..., DataFrame]) -> None:
-    _READERS[type_name] = fn
-
-
 def read_event_input(spark: SparkSession, cfg: EventIOConfig) -> DataFrame:
     """Dispatch on cfg.type; honors skip_klio_read (config/_io.py:135-153)."""
     if cfg.skip_klio_read:

@@ -147,14 +147,17 @@ def test_schema_memo_keys_normalized_dir(spark, sf_dir):
 
 
 def test_core_sec_dropped_when_best_rep_read_fails():
-    """A new best rep whose counter read fails must not keep the older
-    rep's core_sec beside its own wall time."""
+    """The best rep's layer record is kept, with its task run time as
+    core_sec; a new best rep whose read fails drops both, so no older
+    rep's record sits beside its wall time."""
     import bench
 
-    core_sec = {}
-    bench._record_core_sec(core_sec, "q", 1000, 3500)
+    rep = {"jobs": 2, "stages": 3, "tasks": 9, "task_run_s": 2.5,
+           "task_cpu_s": 1.25, "shuffle_read_bytes": 10,
+           "shuffle_write_bytes": 10, "spill_bytes": 0}
+    core_sec, layers = {}, {}
+    bench._record_layers(core_sec, layers, "q", 0.1, 0.4, rep)
     assert core_sec == {"q": 2.5}
-    bench._record_core_sec(core_sec, "q", 1000, None)
-    assert core_sec == {}
-    bench._record_core_sec(core_sec, "q", None, 10)
-    assert core_sec == {}
+    assert layers == {"q": {"build_s": 0.1, "exec_s": 0.4, **rep}}
+    bench._record_layers(core_sec, layers, "q", 0.1, 0.3, None)
+    assert core_sec == {} and layers == {}

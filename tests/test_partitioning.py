@@ -55,30 +55,38 @@ def test_bench_keeps_foreign_tables_and_leaves_none_of_its_own(tmp_path, sf_dir)
     """bench.py builds q144's bucketed index in a per-session database
     under the warehouse: another session's table dir survives the run,
     and the bench session's own database is gone once its process
-    exits. bench.py runs from a copy so its BENCH_LOCAL.json lands in
-    the temp dir."""
+    exits. bench.py writes BENCH_LOCAL.json to its working directory,
+    so the tracked ledger stays untouched, and the file holds q144's
+    layer record, whose task_run_s is the reported core_sec."""
     import json
     import os
-    import shutil
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tracked = os.path.join(repo, "BENCH_LOCAL.json")
+    with open(tracked, "rb") as f:
+        tracked_before = f.read()
     foreign = tmp_path / "spark-warehouse" / "q144_inv_index_deadbeef"
     foreign.mkdir(parents=True)
     (foreign / "part-00000.parquet").write_bytes(b"live")
-    shutil.copy(os.path.join(repo, "bench.py"), tmp_path)
     env = dict(
         os.environ, PYTHONPATH=repo, SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_BENCH_REPS="1", SPARK_GRAFT_CPUS="2",
         SPARK_DRIVER_MEM="1g",
     )
+    q = "q144_inverted_index_topk"
     proc = subprocess.run(
-        [sys.executable, "bench.py", "q144_inverted_index_topk"],
+        [sys.executable, os.path.join(repo, "bench.py"), q],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     with open(tmp_path / "BENCH_LOCAL.json") as f:
-        assert json.load(f)["queries"]["q144_inverted_index_topk"] > 0
+        out = json.load(f)
+    assert out["queries"][q] > 0
+    assert out["layers"][q]["jobs"] >= 1
+    assert out["layers"][q]["task_run_s"] == out["core_sec"][q]
+    with open(tracked, "rb") as f:
+        assert f.read() == tracked_before
     assert (foreign / "part-00000.parquet").read_bytes() == b"live"
     assert os.listdir(tmp_path / "spark-warehouse") == [foreign.name]

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from klio_spark import envelope as env
 from klio_spark import udf as kudf
 from klio_spark.config import EventIOConfig
-from klio_spark.operators.counters import count_messages, get_count
+from klio_spark.operators.counters import count_messages
 from klio_spark.operators.debug import debug_message
 from klio_spark.sinks import write_event_output
 
@@ -111,9 +111,13 @@ def test_skip_klio_write(spark, tmp_path):
 def test_message_counter_observe(spark):
     """KlioMessageCounter parity: counts piggyback the materializing job."""
     df = env.from_elements(spark, ["a", "b", "c"])
-    counted = count_messages(df.filter(F.col("element") != "b"), "filtered")
+    counted, obs = count_messages(df.filter(F.col("element") != "b"), "filtered")
     assert counted.count() == 2  # action triggers observation
-    assert get_count("filtered") == 2
+    assert obs.get["count"] == 2
+    # a second job under the same suffix has its own handle
+    again, obs2 = count_messages(df, "filtered")
+    assert again.count() == 3
+    assert obs2.get["count"] == 3 and obs.get["count"] == 2
 
 
 def test_debug_message_passthrough(spark, caplog):

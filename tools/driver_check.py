@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Strict driver-replica correctness gate.
 
-Differences from tools/check_correctness.py (the forgiving local canon):
-  * builds a VANILLA SparkSession — no session.py defaults — exactly like
+The repo's one correctness harness: each query on Spark against its
+oracle SQL on DuckDB over the same parquet. Unlike a forgiving canon:
+  * it builds a VANILLA SparkSession — no session.py defaults — exactly like
     the round driver, so session-conf assumptions (e.g. nanosAsLong) fail
     here the way they fail there;
-  * compares pandas frames (spark.toPandas vs duckdb .df()) with a canon
+  * it compares pandas frames (spark.toPandas vs duckdb .df()) with a canon
     that does NOT collapse int-valued floats: int64 1234 vs float64 1234.0
     is a mismatch — this is the class that produced round-1's q04/q42/q60
     hash failures (DuckDB SUM(int) returns HUGEINT and CEIL/FLOOR return
