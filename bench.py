@@ -125,7 +125,7 @@ def main() -> int:
         + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     )
 
-    from klio_spark.queries import all_queries
+    from klio_spark.queries import all_queries, release_scoped_caches
     from klio_spark.session import get_spark
 
     spark = get_spark("klio-spark-bench")
@@ -204,6 +204,9 @@ def main() -> int:
                 # py4j reference dies, so force a collection or their
                 # storage accumulates across the ~240 query executions
                 # and later persists thrash against a full store.
+                # release_scoped_caches also drops the registry's own
+                # references to the query's scoped_persist frames.
+                release_scoped_caches()
                 spark.catalog.clearCache()
                 gc.collect()
         timings[name] = best

@@ -1,9 +1,9 @@
 """Audio transforms over envelope DataFrames (reference: klio_audio).
 
 Operator parity (audio/src/klio_audio/transforms/):
-  load_binary   ~ GcsLoadBinary (io.py:28-111): path join against a
-                  binaryFile scan — bytes enter the plan HERE, as late as
-                  possible, and stay out of shuffles
+  load_binary   ~ GcsLoadBinary (io.py:28-111): one read per element of
+                  {location}/{element}{file_suffix} through pyarrow.fs —
+                  only the requested objects, no listing, no join
   load_audio    ~ LoadAudio (audio.py:26-73)
   get_stft      ~ GetSTFT (audio.py:76-132) — magnitude+phase split (the
                   complex matrix has no Arrow type; SURVEY §7 known-hard)
@@ -22,13 +22,14 @@ parameters. 2-D features are stored as ARRAY<ARRAY<FLOAT>> columns
 
 from __future__ import annotations
 
+import functools
 import io
+import os
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from klio_spark.audio import dsp
 from klio_spark.config import DataIOConfig
@@ -37,32 +38,43 @@ from klio_spark.operators.existence import path_for
 MAT = "array<array<float>>"
 
 
-def load_binary(
-    df: DataFrame, cfg: DataIOConfig, spark: SparkSession | None = None
-) -> DataFrame:
-    """Attach blob bytes by joining the element stream against a
-    binaryFile scan of the data-input location (GcsLoadBinary parity).
+def load_binary(df: DataFrame, cfg: DataIOConfig) -> DataFrame:
+    """Attach each element's blob as the `payload` column (GcsLoadBinary
+    parity), replacing any payload `df` had.
 
-    One distributed scan of the store instead of per-element downloads;
-    bytes appear in the LAST stage before the consuming UDF. Spark picks
-    the join from the store's size: under the broadcast threshold it
-    reads EVERY blob in the location (not only the requested ones) and
-    broadcasts them; above it, the store is shuffled by path.
-    """
-    spark = spark or df.sparkSession
-    reader = spark.read.format("binaryFile")
-    if cfg.file_suffix:
-        reader = reader.option("pathGlobFilter", f"*{cfg.file_suffix}")
-    blobs = reader.load(cfg.location).select(
-        F.regexp_replace("path", "^file:/*", "/").alias("_path"),
-        F.col("content").alias("_blob"),
+    One Python pass reads {location}/{element}{file_suffix} (path_for)
+    per row through pyarrow.fs (local paths, file://, gs://, s3://,
+    hdfs://): only the requested objects are read, and the bytes never
+    cross a join, a broadcast or a shuffle. A missing object, or a null
+    element, gives a null payload."""
+    loc = (cfg.location or "").rstrip("/")
+
+    def fetch(path):
+        # path_for's path is loc + "/" + element + suffix: swap the
+        # location for its path inside the filesystem
+        filesystem, base = _filesystem(loc)
+        try:
+            with filesystem.open_input_stream(base + path[len(loc):]) as f:
+                return (f.read(),)
+        except FileNotFoundError:
+            return (None,)
+
+    return _map_rows(
+        df.withColumn("_klio_path", path_for(cfg)), ["_klio_path"],
+        [("payload", "binary")], fetch, drop=("_klio_path", "payload"),
     )
-    keyed = df.withColumn("_path", path_for(cfg))
-    joined = keyed.join(blobs, "_path", "left").drop("_path")
-    if "payload" in df.columns:
-        # the blob becomes the payload channel (replacing any envelope state)
-        joined = joined.drop("payload")
-    return joined.withColumnRenamed("_blob", "payload")
+
+
+@functools.cache
+def _filesystem(location: str):
+    """(pyarrow filesystem, `location`'s path in it), made once per Python
+    worker, so a bucket gets one client rather than one per object. A
+    location with no scheme is a local path."""
+    from pyarrow import fs
+
+    if "://" in location or os.path.isabs(location):
+        return fs.FileSystem.from_uri(location)
+    return fs.LocalFileSystem(), location
 
 
 def _map_rows(df: DataFrame, in_cols, out_fields, fn, drop=()) -> DataFrame:
@@ -341,8 +353,6 @@ def upload_plots(
     """Write rendered PNGs as `{location}/{element}.png` (GcsUploadPlot
     parity, reference audio.py:470-515) — executor-side writes, one file
     per element, driver never sees the bytes."""
-    import os
-
     os.makedirs(location, exist_ok=True)
 
     def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

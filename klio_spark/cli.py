@@ -45,52 +45,71 @@ def _load_user_run(job_dir: str):
     return getattr(mod, "run_basic", None) or mod.run
 
 
-def _build(config_path: str, templates=None, overrides=None):
+def _config(config_path: str, templates=None, overrides=None):
+    """The job's config: klio-job.yaml with --template/--override applied
+    and relative locations resolved. Every command loads it here."""
     from klio_spark.config import KlioJobConfig
-    from klio_spark.session import get_spark
 
     config = KlioJobConfig.from_yaml(config_path, templates, overrides)
     _resolve_locations(config, config_path)
+    return config
+
+
+def _build(config_path: str, templates=None, overrides=None):
+    from klio_spark.session import get_spark
+
+    config = _config(config_path, templates, overrides)
     spark = get_spark(config.job_name, conf=config.spark_confs())
     return spark, config
 
 
-def _resolve_locations(config, config_path: str) -> None:
-    """Resolve relative I/O locations against the job dir (portable
-    examples) — every command that touches job I/O must apply the same
-    rule, or publish and run would disagree on where `topic` lives."""
-    base = os.path.dirname(os.path.abspath(config_path))
-    config.job_dir = base
-    def _rel(p: str) -> bool:
-        return bool(p) and not os.path.isabs(p) and "://" not in p
-
-    for io in (
-        config.event_inputs + config.event_outputs
-        + config.data_inputs + config.data_outputs
-    ):
-        if _rel(io.location):
-            io.location = os.path.join(base, io.location)
-        # a relative options.checkpoint must resolve the same way, or a
-        # job started from one CWD and `job stop`ped from another would
-        # look for the stop marker in different directories
-        opts = getattr(io, "options", None)
-        if isinstance(opts, dict) and _rel(opts.get("checkpoint", "")):
-            opts["checkpoint"] = os.path.join(base, opts["checkpoint"])
+def _job(args):
+    """(spark, config, user run) of the job `args` names: run.py from
+    --job-dir, else from the config's directory."""
+    spark, config = _build(args.config, args.template, args.override)
+    return spark, config, _load_user_run(args.job_dir or config.job_dir)
 
 
-def cmd_job_run(args) -> int:
+def _pipeline(args):
+    """(config, the job's output DataFrame): the configured pipeline over
+    the first event input."""
     from klio_spark.operators import run_pipeline
-    from klio_spark.sinks import write_event_output
     from klio_spark.sources import read_event_input
 
-    spark, config = _build(args.config, args.template, args.override)
-    job_dir = args.job_dir or os.path.dirname(os.path.abspath(args.config))
-    user_run = _load_user_run(job_dir)
-
+    spark, config, user_run = _job(args)
     if not config.event_inputs:
         raise SystemExit("no event inputs configured")
     events = read_event_input(spark, config.event_inputs[0])
-    out = run_pipeline(events, config, user_run, spark)
+    return config, run_pipeline(events, config, user_run, spark)
+
+
+def _resolve_locations(config, config_path: str) -> None:
+    """Resolve relative I/O locations against the job dir (portable
+    examples). Every command loads its config through _config, so all of
+    them apply this one rule: publish and run agree on where `topic`
+    lives, and stop and run on where the stop marker is."""
+    base = os.path.dirname(os.path.abspath(config_path))
+    config.job_dir = base
+
+    def resolve(p):
+        relative = p and not os.path.isabs(p) and "://" not in p
+        return os.path.join(base, p) if relative else p
+
+    events = config.event_inputs + config.event_outputs
+    for io in events + config.data_inputs + config.data_outputs:
+        io.location = resolve(io.location)
+    # a relative options.checkpoint resolves the same way, or a job
+    # started from one CWD and `job stop`ped from another would look for
+    # the stop marker in different directories
+    for io in events:
+        if "checkpoint" in io.options:
+            io.options["checkpoint"] = resolve(io.options["checkpoint"])
+
+
+def cmd_job_run(args) -> int:
+    from klio_spark.sinks import write_event_output
+
+    config, out = _pipeline(args)
     if out.isStreaming and not config.event_outputs:
         raise SystemExit(
             "streaming job needs an event output (the checkpointed sink)"
@@ -104,19 +123,17 @@ def cmd_job_run(args) -> int:
         # API (reference cli job/stop.py JOB_STATE_MAP))
         from klio_spark.streaming import write_stream_text
 
-        sink = config.event_outputs[0]
-        ckpt = _checkpoint_dir(config)
         timeout_s = config.pipeline_options.get("streaming_timeout_s")
         q = write_stream_text(
             out,
-            sink.location,
-            ckpt,
+            config.event_outputs[0].location,
+            _checkpoint_dir(config),
             trigger_available_now=bool(timeout_s),
         )
         if timeout_s:
             q.awaitTermination(int(timeout_s))
             return 0
-        marker = os.path.join(ckpt, "_klio_stop")
+        marker = _stop_marker(config)
         while q.isActive:
             q.awaitTermination(2)
             if os.path.exists(marker):
@@ -140,18 +157,10 @@ def cmd_job_plan(args) -> int:
     execute nothing. Exit 1 on error-severity findings so CI can gate a
     deploy on a clean plan. (No reference analog — Beam exposes no
     inspectable physical plan; this is the Spark dividend.)"""
-    from klio_spark.operators import run_pipeline
     from klio_spark.plans import plan_str
     from klio_spark.plans.lint import lint
-    from klio_spark.sources import read_event_input
 
-    spark, config = _build(args.config, args.template, args.override)
-    job_dir = args.job_dir or os.path.dirname(os.path.abspath(args.config))
-    user_run = _load_user_run(job_dir)
-    if not config.event_inputs:
-        raise SystemExit("no event inputs configured")
-    events = read_event_input(spark, config.event_inputs[0])
-    out = run_pipeline(events, config, user_run, spark)
+    _, out = _pipeline(args)
     print(plan_str(out))
     findings = lint(out)
     for f in findings:
@@ -188,10 +197,7 @@ def cmd_job_profile(args) -> int:
     """
     from klio_spark import envelope as env
 
-    spark, config = _build(args.config, args.template, args.override)
-    job_dir = args.job_dir or os.path.dirname(os.path.abspath(args.config))
-    user_run = _load_user_run(job_dir)
-
+    spark, config, user_run = _job(args)
     if args.input_file:
         with open(args.input_file) as f:
             elements = [line.strip() for line in f if line.strip()]
@@ -250,7 +256,7 @@ def cmd_job_profile(args) -> int:
             mean_sec=round(sum(times) / len(times), 3),
             max_sec=round(max(times), 3),
         )
-    elif args.what == "line":
+    else:  # line (argparse admits only the four modes)
         import inspect
         import linecache
         import sys as _sys
@@ -306,10 +312,6 @@ def cmd_job_profile(args) -> int:
                 }
                 for lineno, (cnt, tsec) in lines
             ],
-        )
-    else:
-        raise SystemExit(
-            f"unknown --what {args.what!r} (cpu|memory|wall|line)"
         )
     wall = report.get("wall_sec") or report.get("mean_sec") or 0
     if wall:
@@ -381,20 +383,13 @@ def cmd_job_create(args) -> int:
         raise SystemExit(f"{out}/klio-job.yaml exists (use --force-create)")
     os.makedirs(out, exist_ok=True)
     os.makedirs(os.path.join(out, "input_data"), exist_ok=True)
-    with open(os.path.join(out, "klio-job.yaml"), "w") as f:
-        f.write(
-            _JOB_YAML_TEMPLATE.format(
-                job_name=args.job_name,
-                project=args.project,
-                suffix=args.file_suffix,
-            )
-        )
-    with open(os.path.join(out, "run.py"), "w") as f:
-        f.write(_RUN_PY_TEMPLATE)
-    with open(os.path.join(out, "test_run.py"), "w") as f:
-        f.write(_TEST_RUN_TEMPLATE)
-    with open(os.path.join(out, "elements.txt"), "w") as f:
-        f.write("")
+    yaml = _JOB_YAML_TEMPLATE.format(
+        job_name=args.job_name, project=args.project, suffix=args.file_suffix
+    )
+    for name, text in [("klio-job.yaml", yaml), ("run.py", _RUN_PY_TEMPLATE),
+                       ("test_run.py", _TEST_RUN_TEMPLATE), ("elements.txt", "")]:
+        with open(os.path.join(out, name), "w") as f:
+            f.write(text)
     print(f"created job '{args.job_name}' in {out}")
     print("next: add element ids to elements.txt, edit run.py, then "
           f"`python -m klio_spark.cli job run --config {out}/klio-job.yaml`")
@@ -407,9 +402,8 @@ def cmd_job_verify(args) -> int:
     Spark analogs are locations, suffixes, and reader/writer registry
     entries). --create makes missing local dirs (reference
     --create-resources)."""
-    from klio_spark.config import KlioJobConfig
-    from klio_spark.sinks import _WRITERS
-    from klio_spark.sources import _READERS
+    from klio_spark.sinks import writer_for
+    from klio_spark.sources import reader_for
 
     ok = True
 
@@ -421,34 +415,34 @@ def cmd_job_verify(args) -> int:
             ok = False
         return cond
 
+    def lookup_error(lookup, io_cfg) -> str:
+        try:
+            lookup(io_cfg)
+        except ValueError as e:
+            return f": {e}"
+        return ""
+
     try:
-        config = KlioJobConfig.from_yaml(args.config, args.template, args.override)
+        config = _config(args.config, args.template, args.override)
     except Exception as e:  # noqa: BLE001
         print(f"[ERR] config parse failed: {e}")
         return 1
     check(bool(config.job_name), f"job_name = {config.job_name!r}")
-    base = os.path.dirname(os.path.abspath(args.config))
-
-    def resolve(loc):
-        if loc and not os.path.isabs(loc) and "://" not in loc:
-            return os.path.join(base, loc)
-        return loc
-
     check(bool(config.event_inputs), "at least one event input")
     for io_cfg in config.event_inputs:
-        fmt = io_cfg.format if io_cfg.type in ("file", "text") else io_cfg.type
-        check(fmt in _READERS or io_cfg.type in _READERS,
-              f"event input type/format {io_cfg.type}/{io_cfg.format} has a reader")
-        loc = resolve(io_cfg.location)
+        err = lookup_error(reader_for, io_cfg)
+        check(not err, f"event input type/format {io_cfg.type}/{io_cfg.format} "
+                       f"has a reader{err}")
+        loc = io_cfg.location
         if loc and "://" not in loc:
             check(os.path.exists(loc), f"event input location exists: {loc}",
                   fatal=False)
     for io_cfg in config.event_outputs:
-        fmt = io_cfg.format if io_cfg.type in ("file", "text") else io_cfg.type
-        check(fmt in _WRITERS or io_cfg.type in _WRITERS,
-              f"event output type/format {io_cfg.type}/{io_cfg.format} has a writer")
+        err = lookup_error(writer_for, io_cfg)
+        check(not err, f"event output type/format {io_cfg.type}/{io_cfg.format} "
+                       f"has a writer{err}")
     for io_cfg in config.data_inputs + config.data_outputs:
-        loc = resolve(io_cfg.location)
+        loc = io_cfg.location
         if loc and "://" not in loc and not os.path.exists(loc):
             if args.create:
                 os.makedirs(loc, exist_ok=True)
@@ -460,7 +454,7 @@ def cmd_job_verify(args) -> int:
             check(True, f"data location exists: {loc}")
         check(io_cfg.file_suffix.startswith(".") or io_cfg.file_suffix == "",
               f"file_suffix {io_cfg.file_suffix!r} starts with '.'", fatal=False)
-    run_py = os.path.join(args.job_dir or base, "run.py")
+    run_py = os.path.join(args.job_dir or config.job_dir, "run.py")
     check(os.path.exists(run_py), f"run.py present at {run_py}")
     print("verification " + ("passed" if ok else "FAILED"))
     return 0 if ok else 1
@@ -469,11 +463,11 @@ def cmd_job_verify(args) -> int:
 def cmd_job_audit(args) -> int:
     """Run the job's tests with pitfall detectors (klio_spark.audit)."""
     from klio_spark.audit import run_audit
-    from klio_spark.config import KlioJobConfig
 
-    config = KlioJobConfig.from_yaml(args.config, args.template, args.override)
-    job_dir = args.job_dir or os.path.dirname(os.path.abspath(args.config))
-    results = run_audit(job_dir, config, run_pytest=not args.skip_tests)
+    config = _config(args.config, args.template, args.override)
+    results = run_audit(
+        args.job_dir or config.job_dir, config, run_pytest=not args.skip_tests
+    )
     n_err = n_warn = 0
     for r in results:
         for e in r.errors:
@@ -521,14 +515,12 @@ def cmd_job_config(args) -> int:
     if action == "show":
         import dataclasses
 
-        config = KlioJobConfig.from_yaml(args.config, args.template, args.override)
+        config = _config(args.config, args.template, args.override)
         print(json.dumps(dataclasses.asdict(config), indent=2, default=str))
         return 0
 
     raw = open(args.config).read()
     if action == "get":
-        if len(targets) != 1:
-            raise SystemExit("usage: job config get <path.to.key>")
         cfg = preprocess(raw, args.template, args.override)
         try:
             print(json.dumps(_config_path_get(cfg, targets[0]), indent=2))
@@ -542,24 +534,16 @@ def cmd_job_config(args) -> int:
             raise SystemExit("usage: job config set path.to.key=value ...")
         apply_overrides(cfg, dict(t.split("=", 1) for t in targets))
         KlioJobConfig.from_dict(cfg)  # validate before writing back
-    elif action == "unset":
-        if len(targets) != 1:
-            raise SystemExit("usage: job config unset <path.to.key>")
-        parts = targets[0].split(".")
-        cur = cfg
-        for part in parts[:-1]:
-            if isinstance(cur, list) and part.isdigit() and int(part) < len(cur):
-                cur = cur[int(part)]
-            elif isinstance(cur, dict) and part in cur:
-                cur = cur[part]
-            else:
-                return 0  # missing path: no-op (glom ignore_missing)
+    else:  # unset
+        *head, last = targets[0].split(".")
+        try:
+            cur = _config_path_get(cfg, ".".join(head)) if head else cfg
+        except KeyError:
+            return 0  # missing path: no-op (glom ignore_missing)
         if isinstance(cur, dict):
-            cur.pop(parts[-1], None)
-        elif isinstance(cur, list) and parts[-1].isdigit() and int(parts[-1]) < len(cur):
-            cur.pop(int(parts[-1]))
-    else:
-        raise SystemExit(f"unknown config action: {action}")
+            cur.pop(last, None)
+        elif isinstance(cur, list) and last.isdigit() and int(last) < len(cur):
+            cur.pop(int(last))
     with open(args.config, "w") as f:
         yaml.dump(cfg, f, default_flow_style=False, sort_keys=False)
     return 0
@@ -570,33 +554,41 @@ def _checkpoint_dir(config) -> str:
     return sink.options.get("checkpoint", sink.location + "_checkpoint")
 
 
+def _stop_marker(config) -> str:
+    """The file the streaming run loop polls for a stop request."""
+    return os.path.join(_checkpoint_dir(config), "_klio_stop")
+
+
+def _request_stop(config, mode: str) -> str | None:
+    """Write `mode` (drain | cancel) into the stop marker; the marker's
+    path, or None when the job has no event output or no checkpoint dir
+    (nothing of it ever ran)."""
+    if not config.event_outputs or not os.path.isdir(_checkpoint_dir(config)):
+        return None
+    marker = _stop_marker(config)
+    with open(marker, "w") as f:
+        f.write(mode)
+    return marker
+
+
 def cmd_job_deploy(args) -> int:
     """Cancel any currently running job of the same name, then run —
     reference `job deploy` (cli.py:230-297; "this will first cancel any
     currently running job of the same name & region", draining
     unsupported there, so the pre-stop is a cancel here too)."""
-    from klio_spark.config import KlioJobConfig
-
-    config = KlioJobConfig.from_yaml(args.config, args.template, args.override)
-    if config.event_outputs:
-        base = os.path.dirname(os.path.abspath(args.config))
-        ckpt = _checkpoint_dir(config)
-        if not os.path.isabs(ckpt) and "://" not in ckpt:
-            ckpt = os.path.join(base, ckpt)
-        if os.path.isdir(ckpt):
-            marker = os.path.join(ckpt, "_klio_stop")
-            with open(marker, "w") as f:
-                f.write("cancel")
-            # a running job consumes the marker as it exits; if nothing
-            # was running, clear it so the fresh run doesn't insta-stop
-            for _ in range(60):
-                if not os.path.exists(marker):
-                    break
-                time.sleep(0.5)
-            if os.path.exists(marker):
-                os.remove(marker)
-            else:
-                print(f"cancelled previous run of {config.job_name}")
+    config = _config(args.config, args.template, args.override)
+    marker = _request_stop(config, "cancel")
+    if marker:
+        # a running job consumes the marker as it exits; if nothing
+        # was running, clear it so the fresh run doesn't insta-stop
+        for _ in range(60):
+            if not os.path.exists(marker):
+                break
+            time.sleep(0.5)
+        if os.path.exists(marker):
+            os.remove(marker)
+        else:
+            print(f"cancelled previous run of {config.job_name}")
     return cmd_job_run(args)
 
 
@@ -609,22 +601,14 @@ def cmd_job_stop(args) -> int:
     then exits — no message loss, matches JOB_STATE_DRAINED. cancel:
     immediate stop, unprocessed batches stay pending in the checkpoint
     (redelivered on restart), matches JOB_STATE_CANCELLED."""
-    from klio_spark.config import KlioJobConfig
-
-    config = KlioJobConfig.from_yaml(args.config, args.template, args.override)
+    config = _config(args.config, args.template, args.override)
     if not config.event_outputs:
         raise SystemExit("job has no event output — nothing to stop")
-    base = os.path.dirname(os.path.abspath(args.config))
-    ckpt = _checkpoint_dir(config)
-    if not os.path.isabs(ckpt) and "://" not in ckpt:
-        ckpt = os.path.join(base, ckpt)
-    if not os.path.isdir(ckpt):
+    if not _request_stop(config, args.mode):
         # reference stop.py warns and continues when no active job is found
         print(f"no running job found for '{config.job_name}' "
-              f"(no checkpoint at {ckpt}); nothing to stop")
+              f"(no checkpoint at {_checkpoint_dir(config)}); nothing to stop")
         return 0
-    with open(os.path.join(ckpt, "_klio_stop"), "w") as f:
-        f.write(args.mode)
     print(f"requested {args.mode} of job {config.job_name}")
     return 0
 
@@ -637,16 +621,7 @@ def cmd_job_delete(args) -> int:
     before its dirs disappear. --force skips the confirmation dialog."""
     import shutil
 
-    from klio_spark.config import KlioJobConfig
-
-    config = KlioJobConfig.from_yaml(args.config, args.template, args.override)
-    base = os.path.dirname(os.path.abspath(args.config))
-
-    def _abs(loc: str) -> str:
-        if loc and not os.path.isabs(loc) and "://" not in loc:
-            return os.path.join(base, loc)
-        return loc
-
+    config = _config(args.config, args.template, args.override)
     resources: list[tuple[str, str]] = []
     for kind, ios in (
         ("event input", config.event_inputs),
@@ -656,15 +631,12 @@ def cmd_job_delete(args) -> int:
     ):
         for io in ios:
             if io.location:
-                resources.append((kind, _abs(io.location)))
+                resources.append((kind, io.location))
     if config.event_outputs:
-        resources.append(("checkpoint", _abs(_checkpoint_dir(config))))
+        resources.append(("checkpoint", _checkpoint_dir(config)))
 
     # drain a still-running job before pulling its dirs out from under it
-    ckpt = _abs(_checkpoint_dir(config)) if config.event_outputs else None
-    if ckpt and os.path.isdir(ckpt):
-        with open(os.path.join(ckpt, "_klio_stop"), "w") as f:
-            f.write("drain")
+    _request_stop(config, "drain")
 
     deleted = 0
     for kind, loc in resources:
@@ -704,10 +676,7 @@ def cmd_message_publish(args) -> int:
     Top-down (default): recipients=anyone. Bottom-up (--bottom-up): only
     this job processes it, and trigger_children_of flips the message back
     to anyone once it passes this job (publish.py:54-72)."""
-    from klio_spark.config import KlioJobConfig
-
-    config = KlioJobConfig.from_yaml(args.config, args.template, args.override)
-    _resolve_locations(config, args.config)
+    config = _config(args.config, args.template, args.override)
     inp = config.event_inputs[0] if config.event_inputs else None
     if inp is None or not inp.location:
         raise SystemExit("job has no file event input to publish into")
@@ -742,6 +711,9 @@ def main(argv: list[str] | None = None) -> int:
     job = sub.add_parser("job").add_subparsers(dest="cmd", required=True)
 
     def _common(sp):
+        # klio job run --template KEY=VAL --override path.to.key=VAL
+        # (core _preprocessing.py: templates fill $VARs, overrides assign
+        # dotted paths; repeatable)
         sp.add_argument("--config", default="klio-job.yaml")
         sp.add_argument("--job-dir", default=None)
         sp.add_argument("-T", "--template", action="append", default=[])
@@ -774,13 +746,7 @@ def main(argv: list[str] | None = None) -> int:
     ]:
         sp = job.add_parser(name)
         sp.set_defaults(fn=fn)
-        sp.add_argument("--config", default="klio-job.yaml")
-        sp.add_argument("--job-dir", default=None)
-        # klio job run --template KEY=VAL --override path.to.key=VAL
-        # (core _preprocessing.py: templates fill $VARs, overrides assign
-        # dotted paths; repeatable)
-        sp.add_argument("-T", "--template", action="append", default=[])
-        sp.add_argument("-O", "--override", action="append", default=[])
+        _common(sp)
         if name == "profile":
             sp.add_argument("--input-file", default=None)
             sp.add_argument(

@@ -7,7 +7,7 @@ Mirrors the reference's config system (core/src/klio_core/config/core.py:
     job_name: my-job
     pipeline_options: {...}            # -> SparkSession confs
     job_config:
-      allow_non_klio_messages: false
+      allow_non_klio_messages: false   # default of each event input's allow_non_klio
       events:
         inputs:  [{type: file, location: ..., format: text}]
         outputs: [{type: file, location: ..., format: parquet}]
@@ -210,9 +210,8 @@ class EventIOConfig:
     skip_klio_read: bool = False   # config/_io.py:135-153
     skip_klio_write: bool = False  # config/_io.py:157-175
     options: dict[str, Any] = dataclasses.field(default_factory=dict)
-    # streaming (pub/sub stand-in) knobs
+    # streaming (pub/sub stand-in): the Kafka topic a stream input reads
     topic: str | None = None
-    subscription: str | None = None
 
     @classmethod
     def from_dict(cls, d: dict[str, Any]) -> "EventIOConfig":
@@ -249,7 +248,6 @@ class DataIOConfig:
 class KlioJobConfig:
     job_name: str = "klio-spark-job"
     project: str = "local"
-    allow_non_klio_messages: bool = False
     event_inputs: list[EventIOConfig] = dataclasses.field(default_factory=list)
     event_outputs: list[EventIOConfig] = dataclasses.field(default_factory=list)
     data_inputs: list[DataIOConfig] = dataclasses.field(default_factory=list)
@@ -266,17 +264,21 @@ class KlioJobConfig:
         jc = dict(raw.get("job_config", {}))
         events = jc.pop("events", {}) or {}
         data = jc.pop("data", {}) or {}
-        allow = jc.pop("allow_non_klio_messages", False)
+        # `or []` handles present-but-null keys (all entries commented
+        # out in the yaml) — .get's default only covers ABSENT keys
+        event_inputs = [
+            EventIOConfig.from_dict(d) for d in events.get("inputs") or []
+        ]
+        if "allow_non_klio_messages" in jc:
+            # the job-level key is every event input's default; an
+            # input's own allow_non_klio option wins
+            allow = jc.pop("allow_non_klio_messages")
+            for io in event_inputs:
+                io.options.setdefault("allow_non_klio", allow)
         return cls(
             job_name=raw.get("job_name", "klio-spark-job"),
             project=raw.get("project", raw.get("gcp_project", "local")),
-            allow_non_klio_messages=allow,
-            # `or []` handles present-but-null keys (all entries
-            # commented out in the yaml) — .get's default only covers
-            # ABSENT keys
-            event_inputs=[
-                EventIOConfig.from_dict(d) for d in events.get("inputs") or []
-            ],
+            event_inputs=event_inputs,
             event_outputs=[
                 EventIOConfig.from_dict(d) for d in events.get("outputs") or []
             ],

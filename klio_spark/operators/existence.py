@@ -11,9 +11,6 @@ source, which never reads file contents when only `path` is selected),
 then LEFT JOIN the element stream against the listing. The listing side is
 broadcast when small; at billions of objects it becomes a shuffle join on
 the path key, which is still one pass over metadata rather than N RPCs.
-
-A per-row `exists()` fallback is in klio_spark.udf for stores with no
-cheap listing.
 """
 
 from __future__ import annotations

@@ -11,29 +11,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Engine-wide defaults. These matter at 100 TB:
-#  - AQE re-plans shuffles at runtime (coalesce small partitions, skew-split
-#    large ones, demote/promote broadcast joins based on observed sizes).
+# Engine-wide defaults, where they differ from Spark's own (AQE with
+# partition coalescing and skew-join splitting, parquet filter pushdown
+# and 200 shuffle partitions are Spark's defaults already):
 #  - Arrow makes every pandas_udf/mapInPandas exchange columnar batches.
-#  - maxRecordsPerBatch is deliberately modest: klio-style payloads can be
-#    multi-MB binary blobs, and a 10k-row Arrow batch of those would OOM a
-#    Python worker. 512 rows * ~2 MB ≈ 1 GB worst case; tune per job.
+#  - maxRecordsPerBatch is below Spark's 10,000: klio-style payloads can
+#    be multi-MB binary blobs, and a batch of those must fit a Python
+#    worker. 4096 rows * ~2 MB ≈ 8 GB worst case; tune per job.
 _DEFAULT_CONF = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
     "spark.sql.session.timeZone": "UTC",
     # read TIMESTAMP(NANOS) parquet columns as nanos-longs instead of
     # erroring (converted to micros in klio_spark.queries.load)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # Shuffle compression + spill settings are Spark defaults; we pin
-    # shuffle partition count only in local mode (below) and otherwise
-    # leave it to AQE's coalescing.
-    "spark.sql.shuffle.partitions": "200",
 }
 
 

@@ -184,17 +184,22 @@ _WRITERS: dict[str, Callable[[DataFrame, EventIOConfig], None]] = {
 }
 
 
-def write_event_output(df: DataFrame, cfg: EventIOConfig) -> None:
-    """Dispatch on type/format (KlioWriteToEventOutput, helpers.py:214-260)."""
-    if cfg.skip_klio_write:
-        return
+def writer_for(cfg: EventIOConfig) -> Callable[[DataFrame, EventIOConfig], None]:
+    """The writer of an event output: its format for a file/text output,
+    else its type. An unknown one raises ValueError naming the known ones
+    (a typo'd format silently writing text instead of the configured
+    columnar layout is a data-corruption footgun)."""
     fmt = cfg.format if cfg.type in ("file", "text") else cfg.type
-    writer = _WRITERS.get(fmt)
-    if writer is None:
-        # a typo'd format silently writing text instead of the configured
-        # columnar layout is a data-corruption footgun — fail loudly
+    if fmt not in _WRITERS:
         raise ValueError(
             f"unknown event output format {fmt!r} (type={cfg.type!r}); "
             f"known: {sorted(_WRITERS)}"
         )
-    writer(df, cfg)
+    return _WRITERS[fmt]
+
+
+def write_event_output(df: DataFrame, cfg: EventIOConfig) -> None:
+    """Dispatch on type/format (KlioWriteToEventOutput, helpers.py:214-260)."""
+    if cfg.skip_klio_write:
+        return
+    writer_for(cfg)(df, cfg)

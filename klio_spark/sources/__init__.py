@@ -36,6 +36,19 @@ _READERS: dict[str, Callable[..., DataFrame]] = {
 }
 
 
+def reader_for(cfg: EventIOConfig) -> Callable[..., DataFrame]:
+    """The reader of an event input: its format for a file/text input,
+    else its type. An unknown one raises ValueError naming the known ones
+    (read as text instead, a typo'd format would yield garbage events)."""
+    fmt = cfg.format if cfg.type in ("file", "text") else cfg.type
+    if fmt not in _READERS:
+        raise ValueError(
+            f"unknown event input format {fmt!r} (type={cfg.type!r}); "
+            f"known: {sorted(_READERS)}"
+        )
+    return _READERS[fmt]
+
+
 def read_event_input(spark: SparkSession, cfg: EventIOConfig) -> DataFrame:
     """Dispatch on cfg.type; honors skip_klio_read (config/_io.py:135-153)."""
     if cfg.skip_klio_read:
@@ -43,6 +56,4 @@ def read_event_input(spark: SparkSession, cfg: EventIOConfig) -> DataFrame:
             "skip_klio_read is set: the job owns reading; it gets the "
             "SparkSession instead of a DataFrame"
         )
-    fmt = cfg.format if cfg.type in ("file", "text") else cfg.type
-    reader = _READERS.get(fmt) or _READERS[cfg.type]
-    return reader(spark, cfg)
+    return reader_for(cfg)(spark, cfg)

@@ -92,7 +92,7 @@ def audio_store(tmp_path):
 def test_full_audio_pipeline(spark, audio_store):
     cfg = DataIOConfig(location=audio_store, file_suffix=".wav")
     df = env.from_elements(spark, ["track-0", "track-1", "track-2", "missing"])
-    with_bytes = load_binary(df, cfg, spark)
+    with_bytes = load_binary(df, cfg)
     rows = {r.element: r.payload for r in with_bytes.collect()}
     assert rows["missing"] is None and rows["track-0"] is not None
 
@@ -129,7 +129,7 @@ def test_render_plot_and_upload_roundtrip(spark, audio_store, tmp_path):
 
     cfg = DataIOConfig(location=audio_store, file_suffix=".wav")
     df = env.from_elements(spark, ["track-1"])
-    spec = get_spec(get_stft(load_audio(load_binary(df, cfg, spark)),
+    spec = get_spec(get_stft(load_audio(load_binary(df, cfg)),
                              n_fft=256, hop_length=128))
     rendered = render_plot(spec, "spec")
     row = rendered.select("element", "plot_png").collect()[0]
@@ -179,7 +179,7 @@ def test_numpy_dsp_matches_spark_path(spark, audio_store):
     df = env.from_elements(spark, ["track-1"])
     row = (
         get_mel_spec(
-            load_audio(load_binary(df, cfg, spark)), n_fft=256, hop_length=128, n_mels=20
+            load_audio(load_binary(df, cfg)), n_fft=256, hop_length=128, n_mels=20
         )
         .select("mel_spec")
         .collect()[0]
@@ -234,7 +234,7 @@ def test_one_pass_features_equal_per_op_chain(spark, mixed_store):
     whose blob is missing with null sr and features."""
     cfg = DataIOConfig(location=mixed_store, file_suffix=".wav")
     els = ["mono16", "mono8", "stereo16", "missing"]
-    blobs = load_binary(env.from_elements(spark, els), cfg, spark)
+    blobs = load_binary(env.from_elements(spark, els), cfg)
     kw = dict(n_fft=256, hop_length=128)
     mel_kw = dict(kw, n_mels=20)
 
@@ -267,7 +267,7 @@ def test_get_features_subset_and_unknown_name(spark, mixed_store):
     """A feature subset gives only those columns; an unknown name fails
     before any job runs."""
     cfg = DataIOConfig(location=mixed_store, file_suffix=".wav")
-    blobs = load_binary(env.from_elements(spark, ["mono8"]), cfg, spark)
+    blobs = load_binary(env.from_elements(spark, ["mono8"]), cfg)
     out = get_features(blobs, ("mfcc",), n_fft=256, hop_length=128, n_mels=20)
     assert out.columns[-2:] == ["sr", "mfcc"] and "payload" not in out.columns
     with pytest.raises(ValueError):

@@ -161,3 +161,22 @@ def test_core_sec_dropped_when_best_rep_read_fails():
     assert layers == {"q": {"build_s": 0.1, "exec_s": 0.4, **rep}}
     bench._record_layers(core_sec, layers, "q", 0.1, 0.3, None)
     assert core_sec == {} and layers == {}
+
+
+def test_bench_releases_scoped_caches(spark, sf_dir, tmp_path, monkeypatch):
+    """bench.py releases each rep's scoped_persist frames: after an
+    in-process run of q160 (which persists its edge build), the
+    registry holds no reference to any of them."""
+    import sys
+
+    import bench
+    from klio_spark import queries
+
+    monkeypatch.chdir(tmp_path)  # BENCH_LOCAL.json lands here
+    monkeypatch.setattr(sys, "argv", ["bench.py", "q160_triangle_count"])
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPS", "1")
+    # main() prepends the repo to PYTHONPATH; restored at teardown
+    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+    assert bench.main() == 0
+    assert queries._SCOPED_CACHES == []

@@ -52,6 +52,17 @@ def test_verify_fails_on_missing_run_py(created_job, capsys):
     assert "run.py" in capsys.readouterr().out
 
 
+def test_verify_fails_on_unknown_output_format(created_job, capsys):
+    """verify asks the sinks' own lookup, so a format `job run` would
+    refuse to write fails verification too."""
+    cfg = str(created_job / "klio-job.yaml")
+    rc = cli.main(["job", "verify", "--config", cfg,
+                   "-O", "job_config.events.outputs.0.format=bogus"])
+    out = capsys.readouterr().out
+    assert rc == 1
+    assert "[ERR] event output type/format file/bogus has a writer" in out
+
+
 def test_audit_flags_driver_collect(created_job, capsys):
     (created_job / "run.py").write_text(
         "def run(df, config):\n    rows = df.collect()\n    return df\n"

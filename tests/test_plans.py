@@ -640,8 +640,10 @@ def test_job_prologue_scans_events_once_per_branch(spark, audio_job):
 
 
 def test_audio_features_one_python_pass_no_join(spark, audio_job):
-    """The example's feature write: one MapInPandas computes mel and
-    MFCC together, and nothing joins or shuffles after it."""
+    """The example's feature write: one MapInPandas reads the requested
+    blobs and one computes mel and MFCC together, nothing joins or
+    shuffles after them, and the only binaryFile scans are the
+    prologue's two metadata listings (data input and data output)."""
     from klio_spark.operators import setup_prologue
 
     config, events, mod = audio_job
@@ -649,6 +651,9 @@ def test_audio_features_one_python_pass_no_join(spark, audio_job):
     s = plans.plan_str(feats, "simple")
     python_nodes = re.findall(
         r"MapInPandas|ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas", s)
-    assert python_nodes == ["MapInPandas"], s
-    above = s[: s.index("MapInPandas")]
+    assert python_nodes == ["MapInPandas", "MapInPandas"], s
+    above = s[: s.rindex("MapInPandas")]
     assert "Join" not in above and "Exchange" not in above, s
+    scans = re.findall(r"FileScan binaryFile .*", s)
+    assert len(scans) == 2, s
+    assert not any("content" in scan.split("ReadSchema:")[1] for scan in scans), s

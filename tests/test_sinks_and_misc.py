@@ -99,6 +99,33 @@ def test_json_event_roundtrip(spark, tmp_path):
     assert [r.element for r in rows] == ["j1"]
 
 
+def test_unknown_event_formats_raise(spark):
+    """A typo'd event format fails loudly on both sides, naming the
+    known formats, instead of reading or writing text."""
+    from klio_spark.sources import read_event_input
+
+    bogus = EventIOConfig(type="file", format="bogus", location="unused")
+    with pytest.raises(ValueError, match="known: .*'parquet'"):
+        read_event_input(spark, bogus)
+    with pytest.raises(ValueError, match="known: .*'parquet'"):
+        write_event_output(env.from_elements(spark, ["e1"]), bogus)
+
+
+def test_job_level_allow_non_klio_is_each_inputs_default(spark, tmp_path):
+    """job_config.allow_non_klio_messages: true keeps a non-klio line of
+    a wire input; an input's own allow_non_klio option wins."""
+    from klio_spark.config import KlioJobConfig
+    from klio_spark.sources import read_event_input
+
+    (tmp_path / "ids.txt").write_text('{"element": "k1", "version": 2}\nxx\n')
+    io = {"type": "file", "location": str(tmp_path / "ids.txt"), "wire": True}
+    for own, want in [({}, ["k1", "xx"]), ({"allow_non_klio": False}, ["k1"])]:
+        cfg = KlioJobConfig.from_dict({"job_config": {
+            "allow_non_klio_messages": True, "events": {"inputs": [{**io, **own}]}}})
+        got = read_event_input(spark, cfg.event_inputs[0]).collect()
+        assert sorted(r.element for r in got) == want
+
+
 def test_skip_klio_write(spark, tmp_path):
     df = env.from_elements(spark, ["x"])
     cfg = EventIOConfig(
